@@ -37,7 +37,7 @@ import unicodedata
 from pyspark.sql import SparkSession
 
 from .kg import search as kg_search
-from .kg.store import GraphStore
+from .kg.store import SCHEMAS, GraphStore
 from .sanitize import (
     MAX_ENTITY_NAME_LENGTH,
     MAX_ENTITY_TYPE_LENGTH,
@@ -45,11 +45,6 @@ from .sanitize import (
     MAX_OBSERVATIONS_PER_ENTITY,
     MAX_RELATION_TYPE_LENGTH,
 )
-
-_ENTITY_SCHEMA = "name string, entity_type string, created_at bigint"
-_OBS_SCHEMA = "entity_name string, content string, created_at bigint"
-_REL_SCHEMA = "source string, target string, relation_type string"
-
 
 def _edge(ch: str) -> bool:
     # \s plus Unicode Z* — the Python twin of sanitize_col's
@@ -146,8 +141,8 @@ class MemoryClient:
         if not ent_rows:
             return
         self.store.apply_upsert(
-            self.spark.createDataFrame(ent_rows, _ENTITY_SCHEMA),
-            self.spark.createDataFrame(obs_rows, _OBS_SCHEMA),
+            self.spark.createDataFrame(ent_rows, SCHEMAS["entities"]),
+            self.spark.createDataFrame(obs_rows, SCHEMAS["observations"]),
         )
 
     def create_relations(self, relations: list[dict]) -> None:
@@ -177,7 +172,7 @@ class MemoryClient:
                 )
             rows.append((safe_from, safe_to, safe_type))
         self.store.apply_create_relations(
-            self.spark.createDataFrame(rows, _REL_SCHEMA)
+            self.spark.createDataFrame(rows, SCHEMAS["relations"])
         )
 
     def delete_entity(self, name: str) -> None:
@@ -189,7 +184,7 @@ class MemoryClient:
         if g["entities"].where(g["entities"]["name"] == name).count() == 0:
             raise ValueError(f"Entity not found: {name}")
         self.store.apply_delete_entities(
-            self.spark.createDataFrame([(name,)], "name string")
+            self.spark.createDataFrame([(name,)], ["name"])
         )
 
     def delete_relation(self, source: str, target: str, type: str) -> None:
@@ -205,12 +200,15 @@ class MemoryClient:
                 f"Relation not found: {source} -> {target} ({type})"
             )
         self.store.apply_delete_relations(
-            self.spark.createDataFrame([(source, target, type)], _REL_SCHEMA)
+            self.spark.createDataFrame(
+                [(source, target, type)], SCHEMAS["relations"]
+            )
         )
 
     # -------------------------------------------------------- reads
 
-    def _entities_payload(self, rows, obs_by_name) -> list[dict]:
+    def _entities_payload(self, g, rows) -> list[dict]:
+        obs_by_name = self._obs_for(g, [r.name for r in rows])
         return [
             {
                 "name": r.name,
@@ -239,14 +237,12 @@ class MemoryClient:
         rows = g["entities"].where(g["entities"]["name"] == name).collect()
         if not rows:
             raise ValueError(f"Entity not found: {name}")
-        obs = self._obs_for(g, [name])
-        return self._entities_payload(rows, obs)[0]
+        return self._entities_payload(g, rows)[0]
 
     def get_recent_entities(self, limit: int = 10) -> list[dict]:
         g = self.store.read()
         rows = kg_search.get_recent_entities(g["entities"], limit).collect()
-        obs = self._obs_for(g, [r.name for r in rows])
-        return self._entities_payload(rows, obs)
+        return self._entities_payload(g, rows)
 
     def _relations_payload(self, g, names: list[str]) -> list[dict]:
         if not names:
@@ -266,25 +262,25 @@ class MemoryClient:
             for x in rows
         ]
 
+    def _graph_payload(self, g, rows) -> dict:
+        """The {entities, relations} reply for the entity ``rows``
+        (client.ts:433-474)."""
+        return {
+            "entities": self._entities_payload(g, rows),
+            "relations": self._relations_payload(g, [r.name for r in rows]),
+        }
+
     def search_nodes(self, query: str, limit: int = 10) -> dict:
         g = self.store.read()
         ents = kg_search.search_entities(
             g["entities"], g["observations"], query, limit
         ).collect()
-        names = [r.name for r in ents]
-        return {
-            "entities": self._entities_payload(ents, self._obs_for(g, names)),
-            "relations": self._relations_payload(g, names),
-        }
+        return self._graph_payload(g, ents)
 
     def read_graph(self, limit: int = 10) -> dict:
         g = self.store.read()
         ents = kg_search.get_recent_entities(g["entities"], limit).collect()
-        names = [r.name for r in ents]
-        return {
-            "entities": self._entities_payload(ents, self._obs_for(g, names)),
-            "relations": self._relations_payload(g, names),
-        }
+        return self._graph_payload(g, ents)
 
     # -------------------------------------------- historical vector API
 

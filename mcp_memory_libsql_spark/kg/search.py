@@ -192,16 +192,6 @@ def read_graph(
     return relations_for_entities(relations, recent.select("name"))
 
 
-def read_graph_entities(
-    entities: DataFrame, observations: DataFrame, limit: int = 10
-) -> DataFrame:
-    """The entities half of ``read_graph`` — the reference returns
-    ``{entities, relations}`` (client.ts:433-441); ``read_graph``
-    covers the relations half, this covers the recent entities with
-    their observations."""
-    return get_recent_entities_full(entities, observations, limit)
-
-
 def search_nodes(
     entities: DataFrame,
     observations: DataFrame,
@@ -212,17 +202,6 @@ def search_nodes(
     """Relations touching the search result set (client.ts:443)."""
     matched = search_entities(entities, observations, query, limit)
     return relations_for_entities(relations, matched.select("name"))
-
-
-def search_nodes_entities(
-    entities: DataFrame,
-    observations: DataFrame,
-    query: str,
-    limit: int = 10,
-) -> DataFrame:
-    """The entities half of ``search_nodes`` (client.ts:443-474):
-    matched entities with observations attached."""
-    return search_entities_full(entities, observations, query, limit)
 
 
 def context_pack(

@@ -40,9 +40,19 @@ from ..sanitize import (
     sanitize_relation_type,
 )
 
-ENTITY_SCHEMA = "name string, entity_type string, created_at bigint"
-OBSERVATION_SCHEMA = "entity_name string, content string, created_at bigint"
-RELATION_SCHEMA = "source string, target string, relation_type string"
+# The three KG tables, as DDL schemas: every GraphStore snapshot is
+# written and read back under exactly these columns and types.
+SCHEMAS = {
+    "entities": "name string, entity_type string, created_at bigint",
+    "observations": "entity_name string, content string, created_at bigint",
+    "relations": "source string, target string, relation_type string",
+}
+
+
+def _conform(df: DataFrame, schema: str) -> DataFrame:
+    """``df`` selected and cast to the columns of a DDL ``schema``."""
+    fields = (f.split() for f in schema.split(","))
+    return df.select(*[F.col(n).cast(t).alias(n) for n, t in fields])
 
 
 def upsert_entities(
@@ -188,36 +198,69 @@ def delete_relations(relations: DataFrame, batch: DataFrame) -> DataFrame:
     )
 
 
+# Both relation ops carry the same payload: a batch of relation rows.
+_RELATION_BATCH = {"batch_relations": SCHEMAS["relations"]}
+
+
 class GraphStore:
     """Parquet-backed persistent snapshot store for the three KG tables.
 
-    ``path/v{N}/{entities,observations,relations}`` each hold a parquet
-    table. Writes produce a new snapshot directory version and swap a
-    ``_CURRENT`` pointer file — coarse-grained MVCC that maps onto an
-    ACID table format on a real cluster.
+    Writes produce a new version directory and swap a ``_CURRENT``
+    pointer file — coarse-grained MVCC that maps onto an ACID table
+    format on a real cluster.
 
-    **Delta log** (incremental writes): a version can also be a
-    *delta* — just the write batch plus a ``_TYPE`` marker naming the
-    merge op (``delta:upsert``, ``delta:delete_entities``,
-    ``delta:create_relations``, ``delta:delete_relations``). Reads
-    reconstruct state lazily: load the newest full snapshot at-or-below
-    the requested version, then fold each later delta through the same
-    pure merge functions used for eager writes. This is the LSM /
-    lakehouse MERGE pattern: a write costs O(batch) — at 100 TB the
-    base is never rewritten per batch — while batches stay
-    broadcast-sized, so merge-on-read composes broadcast joins and the
-    base table still never shuffles. ``checkpoint()`` materializes the
-    merged state as a new full snapshot, bounding read-path plan depth
-    (call it every O(10) deltas, like compaction in any LSM).
+    **On-disk format.** ``SCHEMAS`` and ``DELTA_OPS`` declare it, and
+    no other code spells out a table schema, delta op or payload:
+
+    - ``path/_CURRENT`` holds the newest committed version ``N``. A
+      ``v{N+1}`` directory without a commit is an unfinished write and
+      is never read.
+    - ``path/v{N}/_TYPE`` names the version's kind: ``snapshot``,
+      ``snapshot:bucketed`` or ``delta:<op>`` for an op of
+      ``DELTA_OPS``. A version without the marker is a snapshot.
+    - A snapshot holds ``v{N}/<table>`` for each table of ``SCHEMAS``;
+      a bucketed one also registers each table in the catalog.
+    - A delta holds ``v{N}/<payload name>`` for each payload its op
+      declares, under the declared schema.
+
+    Every frame is selected and cast to its declared schema when it is
+    written, and read back under that schema, so no read infers one.
+
+    **Delta log** (incremental writes): a delta version holds just
+    the write batch. Reads reconstruct state lazily: load the newest
+    full snapshot at-or-below the requested version, then fold each
+    later delta through its op's pure merge function, the same one
+    used for eager writes. This is the LSM / lakehouse MERGE pattern:
+    a write costs O(batch) — at 100 TB the base is never rewritten per
+    batch — while batches stay broadcast-sized, so merge-on-read
+    composes broadcast joins and the base table still never shuffles.
+    ``checkpoint()`` materializes the merged state as a new full
+    snapshot, bounding read-path plan depth (call it every O(10)
+    deltas, like compaction in any LSM).
     """
 
-    TABLES = ("entities", "observations", "relations")
-    DELTA_OPS = (
-        "upsert",
-        "delete_entities",
-        "create_relations",
-        "delete_relations",
-    )
+    TABLES = tuple(SCHEMAS)
+    # op → ({payload name: schema}, fold). A fold takes the three
+    # tables and then the payload frames, both in declared order, and
+    # returns the three tables after the op.
+    DELTA_OPS = {
+        "upsert": (
+            {
+                "batch_entities": SCHEMAS["entities"],
+                "batch_observations": SCHEMAS["observations"],
+            },
+            lambda e, o, r, ents, obs: (*upsert_entities(e, o, ents, obs), r),
+        ),
+        "delete_entities": ({"names": "name string"}, delete_entities),
+        "create_relations": (
+            _RELATION_BATCH,
+            lambda e, o, r, batch: (e, o, create_relations(r, batch)),
+        ),
+        "delete_relations": (
+            _RELATION_BATCH,
+            lambda e, o, r, batch: (e, o, delete_relations(r, batch)),
+        ),
+    }
     # Natural join keys: bucketing each table on its key makes
     # entities⋈observations (name = entity_name) and
     # entities⋈relations (name = source) exchange-free.
@@ -241,16 +284,13 @@ class GraphStore:
         except FileNotFoundError:
             return -1
 
-    def _table_dir(self, table: str, version: int) -> str:
-        return os.path.join(self.path, f"v{version}", table)
+    def _dir(self, version: int, name: str = "") -> str:
+        return os.path.join(self.path, f"v{version}", name)
 
     def init_empty(self) -> None:
-        empty = {
-            "entities": self.spark.createDataFrame([], ENTITY_SCHEMA),
-            "observations": self.spark.createDataFrame([], OBSERVATION_SCHEMA),
-            "relations": self.spark.createDataFrame([], RELATION_SCHEMA),
-        }
-        self.write(empty)
+        self.write(
+            {t: self.spark.createDataFrame([], s) for t, s in SCHEMAS.items()}
+        )
 
     def list_versions(self) -> list[int]:
         try:
@@ -262,26 +302,37 @@ class GraphStore:
         except FileNotFoundError:
             return []
 
-    def _type_file(self, version: int) -> str:
-        return os.path.join(self.path, f"v{version}", "_TYPE")
-
     def version_type(self, version: int) -> str:
         """``"snapshot"`` or ``"delta:<op>"``. Versions written before
         the delta log existed carry no marker and are snapshots."""
         try:
-            with open(self._type_file(version)) as f:
+            with open(self._dir(version, "_TYPE")) as f:
                 return f.read().strip()
         except FileNotFoundError:
             return "snapshot"
 
-    def _anchor_snapshot(self, version: int) -> int:
-        """Newest full-snapshot version at or below ``version``."""
-        for v in reversed([x for x in self.list_versions() if x <= version]):
-            if self.version_type(v).startswith("snapshot"):
-                return v
+    def _chain(self, version: int | None) -> tuple[int, str, list[tuple[int, str]]]:
+        """What a read at ``version`` (default: current) folds →
+        ``(anchor, anchor kind, [(delta version, kind), ...])``, deltas
+        oldest first. The anchor is the newest snapshot at or below
+        ``version``. Only committed versions can be read."""
+        current = self.current_version()
+        v = current if version is None else version
+        below = [x for x in self.list_versions() if x <= v]
+        if not 0 <= v <= current or not below or below[-1] != v:
+            raise FileNotFoundError(f"no committed version v{v} at {self.path}")
+        deltas = []
+        for x in reversed(below):
+            kind = self.version_type(x)
+            if kind.startswith("snapshot"):
+                return x, kind, deltas[::-1]
+            deltas.append((x, kind))
         raise FileNotFoundError(
-            f"no anchor snapshot at or below v{version} at {self.path}"
+            f"no anchor snapshot at or below v{v} at {self.path}"
         )
+
+    def _load(self, version: int, name: str, schema: str) -> DataFrame:
+        return self.spark.read.schema(schema).parquet(self._dir(version, name))
 
     def read(self, version: int | None = None) -> dict[str, DataFrame]:
         """Read the current state, or time-travel to ``version``.
@@ -290,62 +341,32 @@ class GraphStore:
         delta in ``(anchor, version]`` through the batch merge
         functions. The result is a lazy plan; no data moves until an
         action runs."""
-        v = self.current_version() if version is None else version
-        if v < 0 or (version is not None and v not in self.list_versions()):
-            raise FileNotFoundError(f"no snapshot v{v} at {self.path}")
-        anchor = self._anchor_snapshot(v)
-        if self.version_type(anchor) == "snapshot:bucketed":
+        anchor, kind, deltas = self._chain(version)
+        if kind == "snapshot:bucketed":
             tables = {
                 tbl: self.spark.table(self._bucket_table(tbl, anchor))
                 for tbl in self.TABLES
             }
         else:
             tables = {
-                tbl: self.spark.read.parquet(self._table_dir(tbl, anchor))
-                for tbl in self.TABLES
+                tbl: self._load(anchor, tbl, schema)
+                for tbl, schema in SCHEMAS.items()
             }
-        for dv in [x for x in self.list_versions() if anchor < x <= v]:
-            tables = self._apply_delta(tables, dv)
+        for dv, kind in deltas:
+            tables = self._apply_delta(tables, dv, kind)
         return tables
 
-    def _delta_payload(self, version: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self.path, f"v{version}", name)
-        )
-
     def _apply_delta(
-        self, tables: dict[str, DataFrame], version: int
+        self, tables: dict[str, DataFrame], version: int, kind: str
     ) -> dict[str, DataFrame]:
-        t = self.version_type(version)
-        if t == "delta:upsert":
-            ents, obs = upsert_entities(
-                tables["entities"],
-                tables["observations"],
-                self._delta_payload(version, "batch_entities"),
-                self._delta_payload(version, "batch_observations"),
-            )
-            return {**tables, "entities": ents, "observations": obs}
-        if t == "delta:delete_entities":
-            ents, obs, rels = delete_entities(
-                tables["entities"],
-                tables["observations"],
-                tables["relations"],
-                self._delta_payload(version, "names"),
-            )
-            return {"entities": ents, "observations": obs, "relations": rels}
-        if t == "delta:create_relations":
-            rels = create_relations(
-                tables["relations"],
-                self._delta_payload(version, "batch_relations"),
-            )
-            return {**tables, "relations": rels}
-        if t == "delta:delete_relations":
-            rels = delete_relations(
-                tables["relations"],
-                self._delta_payload(version, "batch_relations"),
-            )
-            return {**tables, "relations": rels}
-        raise ValueError(f"v{version} is not a delta (type={t!r})")
+        op = kind.removeprefix("delta:")
+        if op == kind or op not in self.DELTA_OPS:
+            raise ValueError(f"v{version} is not a delta (type={kind!r})")
+        payload, fold = self.DELTA_OPS[op]
+        frames = [self._load(version, n, s) for n, s in payload.items()]
+        return dict(
+            zip(self.TABLES, fold(*(tables[t] for t in self.TABLES), *frames))
+        )
 
     def _commit_version(self, v: int) -> None:
         os.makedirs(self.path, exist_ok=True)
@@ -359,6 +380,49 @@ class GraphStore:
 
         digest = hashlib.md5(self.path.encode()).hexdigest()[:8]
         return f"gs_{digest}_v{version}_{table}"
+
+    def _write_version(
+        self,
+        kind: str,
+        frames: dict[str, DataFrame],
+        schemas: dict[str, str],
+        n_buckets: int | None = None,
+    ) -> int:
+        """Write ``frames`` as the next version and commit it — the one
+        place a version number is claimed. Each frame is selected and
+        cast to its schema in ``schemas``; a name ``schemas`` does not
+        declare, or one it declares but ``frames`` lacks, raises
+        ``ValueError``. ``n_buckets`` writes bucketed catalog tables
+        instead of plain parquet."""
+        if frames.keys() != schemas.keys():
+            raise ValueError(
+                f"{kind} writes {sorted(schemas)}, got {sorted(frames)}"
+            )
+        v = self.current_version() + 1
+        for name, schema in schemas.items():
+            w = _conform(frames[name], schema).write.mode("overwrite")
+            if n_buckets is None:
+                w.parquet(self._dir(v, name))
+                continue
+            key = self.BUCKET_KEYS[name]
+            (
+                # explicit path → an EXTERNAL table whose data lives
+                # inside the store's version dir: the catalog holds
+                # only bucketing metadata, so this works under any
+                # session whose warehouse dir (CWD-relative by
+                # default) is unwritable, and vacuum's rmtree of
+                # the version dir reclaims the data files
+                w.option("path", self._dir(v, name))
+                .bucketBy(n_buckets, key)
+                .sortBy(key)
+                .format("parquet")
+                .saveAsTable(self._bucket_table(name, v))
+            )
+        os.makedirs(self._dir(v), exist_ok=True)
+        with open(self._dir(v, "_TYPE"), "w") as f:
+            f.write(kind)
+        self._commit_version(v)
+        return v
 
     def write(
         self,
@@ -376,34 +440,10 @@ class GraphStore:
         read-heavy 100 TB KG wants. The version directory still holds
         the ``_TYPE`` marker; MVCC/time-travel semantics are
         unchanged."""
-        v = self.current_version() + 1
-        if bucketed:
-            for tbl in self.TABLES:
-                (
-                    tables[tbl]
-                    .write.mode("overwrite")
-                    # explicit path → an EXTERNAL table whose data lives
-                    # inside the store's version dir: the catalog holds
-                    # only bucketing metadata, so this works under any
-                    # session whose warehouse dir (CWD-relative by
-                    # default) is unwritable, and vacuum's rmtree of
-                    # the version dir reclaims the data files
-                    .option("path", self._table_dir(tbl, v))
-                    .bucketBy(n_buckets, self.BUCKET_KEYS[tbl])
-                    .sortBy(self.BUCKET_KEYS[tbl])
-                    .format("parquet")
-                    .saveAsTable(self._bucket_table(tbl, v))
-                )
-            os.makedirs(os.path.join(self.path, f"v{v}"), exist_ok=True)
-        else:
-            for tbl in self.TABLES:
-                tables[tbl].write.mode("overwrite").parquet(
-                    self._table_dir(tbl, v)
-                )
-        with open(self._type_file(v), "w") as f:
-            f.write("snapshot:bucketed" if bucketed else "snapshot")
-        self._commit_version(v)
-        return v
+        kind = "snapshot:bucketed" if bucketed else "snapshot"
+        return self._write_version(
+            kind, tables, SCHEMAS, n_buckets if bucketed else None
+        )
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
         """Append a delta version holding only the write batch.
@@ -416,48 +456,31 @@ class GraphStore:
             raise FileNotFoundError(
                 "delta write needs an anchor snapshot; call init_empty()/write() first"
             )
-        v = self.current_version() + 1
-        for name, df in payload.items():
-            df.write.mode("overwrite").parquet(
-                os.path.join(self.path, f"v{v}", name)
-            )
-        with open(self._type_file(v), "w") as f:
-            f.write(f"delta:{op}")
-        self._commit_version(v)
-        return v
+        return self._write_version(f"delta:{op}", payload, self.DELTA_OPS[op][0])
+
+    def _delta(self, op: str, *frames: DataFrame) -> int:
+        """``write_delta`` with the payload frames in declared order."""
+        return self.write_delta(op, dict(zip(self.DELTA_OPS[op][0], frames)))
 
     def apply_upsert(
         self, batch_entities: DataFrame, batch_observations: DataFrame
     ) -> int:
         """create_entities as an O(batch) delta write."""
-        return self.write_delta(
-            "upsert",
-            {
-                "batch_entities": batch_entities,
-                "batch_observations": batch_observations,
-            },
-        )
+        return self._delta("upsert", batch_entities, batch_observations)
 
     def apply_delete_entities(self, names: DataFrame) -> int:
-        return self.write_delta("delete_entities", {"names": names})
+        return self._delta("delete_entities", names)
 
     def apply_create_relations(self, batch_relations: DataFrame) -> int:
-        return self.write_delta(
-            "create_relations", {"batch_relations": batch_relations}
-        )
+        return self._delta("create_relations", batch_relations)
 
     def apply_delete_relations(self, batch_relations: DataFrame) -> int:
-        return self.write_delta(
-            "delete_relations", {"batch_relations": batch_relations}
-        )
+        return self._delta("delete_relations", batch_relations)
 
     def delta_chain_length(self, version: int | None = None) -> int:
         """Number of deltas folded into a read at ``version`` — the
         read-path plan-depth metric that tells you when to checkpoint."""
-        v = self.current_version() if version is None else version
-        return len(
-            [x for x in self.list_versions() if self._anchor_snapshot(v) < x <= v]
-        )
+        return len(self._chain(version)[2])
 
     def checkpoint(self, bucketed: bool = False, n_buckets: int = 32) -> int:
         """Materialize merge-on-read state into a new full snapshot,
@@ -481,7 +504,7 @@ class GraphStore:
         # A retained delta needs its anchor snapshot and every delta in
         # between — extend retention down to the oldest such anchor so
         # merge-on-read never dangles.
-        anchor = self._anchor_snapshot(min(keep))
+        anchor = self._chain(min(keep))[0]
         keep |= {v for v in versions if v >= anchor}
         removed = []
         for v in versions:
@@ -491,7 +514,7 @@ class GraphStore:
                         self.spark.sql(
                             f"DROP TABLE IF EXISTS {self._bucket_table(tbl, v)}"
                         )
-                shutil.rmtree(os.path.join(self.path, f"v{v}"))
+                shutil.rmtree(self._dir(v))
                 removed.append(v)
         return removed
 
@@ -508,12 +531,6 @@ class GraphStore:
             for tbl, df in self.read().items()
         }
         return self.write(tables)
-
-    DIFF_KEYS = {
-        "entities": ("name", "entity_type", "created_at"),
-        "observations": ("entity_name", "content", "created_at"),
-        "relations": ("source", "target", "relation_type"),
-    }
 
     def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level snapshot diff → (table_name, change, row_key):
@@ -533,7 +550,7 @@ class GraphStore:
         after = self.read(self.current_version() if v_to is None else v_to)
         parts = []
         for tbl in self.TABLES:
-            cols = self.DIFF_KEYS[tbl]
+            cols = before[tbl].columns
             # JSON struct rendering, not concat_ws: concat_ws skips
             # NULLs and is ambiguous when a value contains the
             # separator ("a|b","c" vs "a","b|c" would compare equal

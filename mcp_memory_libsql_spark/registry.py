@@ -436,7 +436,7 @@ def q_kg_recent_entities_full(spark, sf_dir):
 @query("kg_read_graph_entities")
 def q_kg_read_graph_entities(spark, sf_dir):
     g, _ = _kg(spark, sf_dir)
-    return kg_search.read_graph_entities(g["entities"], g["observations"], 25)
+    return kg_search.get_recent_entities_full(g["entities"], g["observations"], 25)
 
 
 @query("kg_delete_entity")

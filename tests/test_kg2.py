@@ -278,6 +278,127 @@ def test_graphstore_bucketed_snapshot_join_no_exchange(spark, tmp_path):
     assert not spark.catalog.tableExists(store._bucket_table("entities", v))
 
 
+def _mk_delta_store(spark, tmp_path):
+    """``_mk_store``'s snapshot followed by one delta of each op."""
+    store = _mk_store(spark, tmp_path)
+    store.apply_upsert(
+        spark.createDataFrame(
+            [("C", "thing", 30)],
+            "name string, entity_type string, created_at bigint",
+        ),
+        spark.createDataFrame(
+            [("C", "is new", 30)],
+            "entity_name string, content string, created_at bigint",
+        ),
+    )
+    rel = "source string, target string, relation_type string"
+    store.apply_create_relations(
+        spark.createDataFrame([("C", "A", "knows")], rel)
+    )
+    store.apply_delete_relations(
+        spark.createDataFrame([("A", "B", "visited")], rel)
+    )
+    store.apply_delete_entities(spark.createDataFrame([("B",)], "name string"))
+    return store
+
+
+def test_graphstore_read_launches_no_spark_job(spark, tmp_path):
+    store = _mk_delta_store(spark, tmp_path)
+    sc = spark.sparkContext
+    group = f"graphstore-read-{tmp_path.name}"
+    sc.setJobGroup(group, "GraphStore.read")
+    try:
+        state = store.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # every snapshot and payload is read under its declared schema,
+    # so building the merge-on-read plan infers nothing
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert {tuple(r) for r in state["entities"].collect()} == {
+        ("A", "person", 10),
+        ("C", "thing", 30),
+    }
+    assert {tuple(r) for r in state["relations"].collect()} == {
+        ("C", "A", "knows")
+    }
+
+
+def test_graphstore_chain_walks_each_version_once(spark, tmp_path, monkeypatch):
+    store = _mk_delta_store(spark, tmp_path)
+    calls = {"version_type": 0, "list_versions": 0}
+    for meth in calls:
+        orig = getattr(store, meth)
+
+        def counted(*args, _orig=orig, _meth=meth):
+            calls[_meth] += 1
+            return _orig(*args)
+
+        monkeypatch.setattr(store, meth, counted)
+    chain = store.delta_chain_length()
+    assert chain == 4
+    # the four deltas plus their anchor, each typed once
+    assert calls == {"version_type": chain + 1, "list_versions": 1}
+
+
+def test_graphstore_write_delta_rejects_undeclared_payload(spark, tmp_path):
+    store = _mk_store(spark, tmp_path)
+    v = store.current_version()
+    rels = spark.createDataFrame(
+        [("A", "B", "r")], "source string, target string, relation_type string"
+    )
+    with pytest.raises(ValueError, match="unknown delta op"):
+        store.write_delta("merge", {"batch_relations": rels})
+    with pytest.raises(ValueError):  # missing payload name
+        store.write_delta("upsert", {"batch_entities": rels})
+    with pytest.raises(ValueError):  # extra payload name
+        store.write_delta(
+            "create_relations", {"batch_relations": rels, "names": rels}
+        )
+    # a refused write claims no version
+    assert store.current_version() == v
+    assert store.list_versions() == [0, v]
+
+
+def test_graphstore_payload_conforms_to_declared_schema(spark, tmp_path):
+    store = _mk_store(spark, tmp_path)
+    v = store.apply_upsert(
+        spark.createDataFrame(
+            [("C", "thing", 30, "extra")],
+            "name string, entity_type string, created_at int, note string",
+        ),
+        spark.createDataFrame(
+            [("C", "is new", 30)],
+            "entity_name string, content string, created_at int",
+        ),
+    )
+    declared = [
+        ("name", "string"), ("entity_type", "string"), ("created_at", "bigint")
+    ]
+    # written cast and selected, so even a schema-inferring reader
+    # sees the declared columns
+    payload = spark.read.parquet(store._dir(v, "batch_entities"))
+    assert payload.dtypes == declared
+    got = store.read()
+    assert got["entities"].dtypes == declared
+    assert ("C", "thing", 30) in {tuple(r) for r in got["entities"].collect()}
+    assert ("C", "is new", 30) in {
+        tuple(r) for r in got["observations"].collect()
+    }
+
+
+def test_graphstore_refuses_uncommitted_version(spark, tmp_path):
+    store = _mk_store(spark, tmp_path)
+    v = store.current_version()
+    # a writer that crashed after its _TYPE marker but before the
+    # _CURRENT swap leaves v{current+1} behind
+    pending = tmp_path / "dstore" / f"v{v + 1}"
+    pending.mkdir()
+    (pending / "_TYPE").write_text("snapshot")
+    with pytest.raises(FileNotFoundError):
+        store.read(version=v + 1)
+    assert {r.name for r in store.read()["entities"].collect()} == {"A", "B"}
+
+
 def test_similar_entities_jaccard_and_symmetry(spark, sf_dir):
     from mcp_memory_libsql_spark.io.tables import load_tables
     from mcp_memory_libsql_spark.kg import similarity, views
