@@ -257,55 +257,16 @@ def _build_indexes(spark, sf_dir: str) -> dict[str, float]:
     extended loop billed these one-time builds to whichever consumer
     ran first (kg_suggest_weighted +48%, vec_lsh_bucket_profile +85%
     phantom regressions); at 100 TB they're ingest-time artifacts, so
-    the bench now accounts for them the same way."""
+    the bench accounts for them the same way. Artifacts built as
+    another's dependency are already cached when their own line runs,
+    so each line times only its own build."""
     from mcp_memory_libsql_spark import registry as reg
 
     builds: dict[str, float] = {}
-    t0 = time.perf_counter()
-    g, _ = reg._kg(spark, sf_dir)
-    builds["kg_snapshot_index_build"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    reg._nbr_index(spark, sf_dir, g)
-    builds["nbr_postings_index_build"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    reg._lsh_index(spark, sf_dir)
-    builds["lsh_signature_index_build"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    reg._lpa(spark, sf_dir, g)
-    builds["lpa_labels_index_build"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    reg._lsh_pairs(spark, sf_dir)
-    builds["lsh_neardup_pairs_build"] = round(time.perf_counter() - t0, 3)
-    # r07: the refresh twins' disk-backed 80% base artifacts are the
-    # same kind of one-time ingest cost — without this, whichever
-    # refresh gate ran first absorbed the base build (~15s phantom on
-    # kg_pairs_refresh), burying the actual merge wall the entry is
-    # supposed to report.
-    t0 = time.perf_counter()
-    reg._refresh_base(spark, sf_dir)
-    builds["refresh_base_build"] = round(time.perf_counter() - t0, 3)
-    # r09: two more one-time bases joined the disk-backed family —
-    # vec_neardup_refresh's 95% signature index + pair stream
-    # (_neardup_base) and kg_lpa_refresh's base label history
-    # (_lpa_hist_base). Same accounting rule as r03/r07: report the
-    # build as its own entry so the refresh entries time the MERGE,
-    # not whichever invocation ran first.
-    from pyspark.sql import functions as F
-
-    from mcp_memory_libsql_spark.io.tables import load_tables as _lt
-
-    t0 = time.perf_counter()
-    emb = _lt(spark, sf_dir)["embeddings"]
-    reg._neardup_base(
-        spark,
-        sf_dir,
-        emb.where(F.pmod(F.col("vec_id"), F.lit(19)) != 0),
-        reg._mining_bits(spark, sf_dir, 0.4),
-    )
-    builds["neardup_base_build"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    reg._lpa_hist_base(spark, sf_dir)
-    builds["lpa_hist_base_build"] = round(time.perf_counter() - t0, 3)
+    for get in reg._INDEX_BUILDS:
+        t0 = time.perf_counter()
+        get(spark, sf_dir)
+        builds[get.artifact] = round(time.perf_counter() - t0, 3)
     return builds
 
 

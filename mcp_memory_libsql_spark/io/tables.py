@@ -92,7 +92,7 @@ _CLUSTER_COL = {
 }
 
 # source identity ("abspath:size:mtime_ns") -> snapshot dir. Process-
-# scoped like registry._NBR_DIRS: parquet outlives sessions, so no
+# scoped, unlike registry._ARTIFACTS: parquet outlives sessions, so no
 # appId key; a fresh process rebuilds (cheap) rather than trusting a
 # stale cross-process cache.
 _SPLIT_DIRS: dict[str, str] = {}

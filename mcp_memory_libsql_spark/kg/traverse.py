@@ -493,8 +493,8 @@ BROADCAST_LOOP_MAX = 2_000_000
 # aggregate makes each round's ranks a TWO-consumer node (next round's
 # dm + next round's contribs join); an un-checkpointed round is
 # therefore planned twice downstream, so the cadence trades checkpoint
-# materializations against duplicated O(E) joins. Measured by
-# tools/ab_pagerank_cadence.py — see the call site.
+# materializations against duplicated O(E) joins. Measured in
+# OPTIMIZATION_r09.md — see the call site.
 PAGERANK_CKPT_EVERY = 1
 
 
@@ -1451,7 +1451,7 @@ def pagerank_full(
         )
         # Lineage-cut cadence (PAGERANK_CKPT_EVERY; the checkpoint is
         # a plan artifact, not semantics — values identical across
-        # cadences, equality-gated by tools/ab_pagerank_cadence.py).
+        # cadences, equality-gated in the A/B of OPTIMIZATION_r09.md).
         # r08 ran cadence 2 to halve materializations, but unlike the
         # sibling loops each round's ranks here has TWO downstream
         # consumers (the next round's dangling-mass aggregate AND its

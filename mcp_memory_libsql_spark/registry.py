@@ -5,11 +5,24 @@ driver's correctness gate.
 Each callable takes (spark, sf_dir) and returns a DataFrame whose
 column names/types match the oracle exactly (the gate sorts columns
 by name and hashes values order-insensitively).
+
+Shared artifacts (the KG snapshot, the neighbor and LSH indexes, the
+refresh bases, fitted models) come from getters made by
+:func:`_artifact`. Each is keyed by (Spark application id, sf_dir,
+artifact name) and built once per session on first use. A call from
+a new session evicts every other session's entries and deletes their
+temp dirs; an atexit hook deletes the rest. They are per-session
+BUILD artifacts — the stored index a query reads — never query
+results reused across runs. ``_INDEX_BUILDS`` lists the ones bench.py
+times as their own lines.
 """
 
 from __future__ import annotations
 
 import atexit
+import functools
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable
 
@@ -53,219 +66,193 @@ def query(name: str):
 # writes them through GraphStore (parquet snapshot); every query then
 # reads the materialized parquet — column-pruned, pushdown-friendly,
 # and free of the relations derivation cost (the lineitem⋈orders
-# distinct dominated kg_search_nodes in r01's bench).
-_KG_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
-_KG_DIRS: dict[tuple[str, str], str] = {}
-# Inverted neighbor-postings index (kg/similarity.neighbor_postings):
-# like the KG snapshot, an index-BUILD artifact — three similarity
-# surfaces read it, so it's materialized to parquet once per
-# (session, sf_dir) instead of re-shuffling the edge table per query.
-_NBR_DIRS: dict[tuple[str, str], str] = {}
-# Embedding LSH signature index (vector/lsh.bucketize): the ANN
-# index-build artifact — four serving/dedup surfaces share it.
-_LSH_DIRS: dict[tuple[str, str], str] = {}
-# Scored near-dup PAIR stream at the mining threshold (the artifact
-# one level above the signatures, like the KG scored-pair stream):
-# four dedup surfaces consume the identical pair set.
-_LSH_PAIR_DIRS: dict[tuple[str, str], str] = {}
-# Base-split artifacts for the incremental-refresh oracle twins
-# (kg_postings_refresh / kg_pairs_refresh): the 95%% base build written
-# ONCE per (session, sf_dir) and read back from parquet — disk-backed
-# exactly like the production old-index the refresh consumes, and zero
-# driver-heap residency (a persisted pair stream OOM'd the vanilla 1g
-# gate session).
-_REFRESH_BASE_DIRS: dict[tuple[str, str], str] = {}
-# Base-split artifacts for vec_neardup_refresh (the embedding twin of
-# _REFRESH_BASE_DIRS): the 95% signature index + scored pair stream
-# the refresh consumes, written once per (session, sf_dir). Before
-# r09 every invocation re-derived both via localCheckpoint — ~40s of
-# the query's 48s wall was rebuilding the production STORED artifact
-# inside the timed region, which the KG refresh twins never did.
-_NEARDUP_BASE_DIRS: dict[tuple[str, str], str] = {}
-# One re-entrant guard for every check-then-build index cache above:
-# without it, two threads racing the same (appId, sf_dir) key would
-# both write parquet and one tempdir would clobber the other's dict
+# distinct dominated kg_search_nodes in r01's bench). The other shared
+# indexes below follow the same rule: build once, read back per query.
+#
+# One guard for every artifact: without it, two threads racing the
+# same key would both build and one tempdir would clobber the other's
 # entry, leaking disk until process exit — the same race
 # io/tables._SPLIT_LOCK closes for the sf-split cache. RLock because
-# _lsh_pairs builds THROUGH _lsh_index/_mining_bits on the same
-# thread.
-_INDEX_LOCK = threading.RLock()
+# builders fetch their dependencies through the getters on the same
+# thread (_lsh_pairs → _lsh_signatures + _emb_count).
+_ARTIFACTS: dict[tuple[str, str, str], tuple[object, str | None]] = {}
+_ARTIFACT_LOCK = threading.RLock()
 
 
-def _evict_stale(app_id: str) -> None:
-    """Drop cache entries from PREVIOUS SparkSessions in this
-    process (their DataFrames are pinned to stopped contexts) and
-    delete their orphaned KG snapshot temp dirs — without this, a
-    long-lived process that restarts sessions leaks memory and /tmp
-    disk one entry per (appId, sf_dir). Called by every index
-    helper (_kg, _nbr_index, _lsh_index), so LSH-only sessions
-    evict too; the atexit hook below reclaims whatever the final
-    session leaves behind."""
-    import shutil
-
-    for cache in (
-        _KG_CACHE,
-        _TFIDF_CACHE,
-        _LPA_CACHE,
-        _LPA_COUNTS,
-        _LPA_HIST_CACHE,
-        _EMB_COUNTS,
-    ):
-        for k in [k for k in cache if k[0] != app_id]:
-            del cache[k]
-    for dirs in (_KG_DIRS, _NBR_DIRS, _LSH_DIRS, _LSH_PAIR_DIRS,
-                 _REFRESH_BASE_DIRS, _NEARDUP_BASE_DIRS):
-        for k in [k for k in dirs if k[0] != app_id]:
-            shutil.rmtree(dirs.pop(k), ignore_errors=True)
-
-
-def _cleanup_index_dirs() -> None:
-    import shutil
-
-    for dirs in (_KG_DIRS, _NBR_DIRS, _LSH_DIRS, _LSH_PAIR_DIRS,
-                 _REFRESH_BASE_DIRS, _NEARDUP_BASE_DIRS):
-        for path in dirs.values():
+def _drop_artifacts(keep_app: str | None = None) -> None:
+    """Forget every artifact not built by session ``keep_app`` and
+    delete its directory. Entries of a previous SparkSession are
+    pinned to a stopped context, so a long-lived process that restarts
+    sessions would otherwise leak memory and /tmp disk per entry; with
+    no argument (the atexit hook) everything goes."""
+    for key in [k for k in _ARTIFACTS if k[0] != keep_app]:
+        path = _ARTIFACTS.pop(key)[1]
+        if path is not None:
             shutil.rmtree(path, ignore_errors=True)
-        dirs.clear()
 
 
-atexit.register(_cleanup_index_dirs)
+atexit.register(_drop_artifacts)
 
 
-def _nbr_index(spark: SparkSession, sf_dir: str, g) -> tuple:
-    """Disk-backed (postings, names, scored_pairs) neighbor index per
-    (session, sf_dir) — parquet-materialized so an external
-    clearCache() can't unpin it, and every similarity query reads a
-    column-pruned scan instead of rebuilding the edge shuffle.
+def _artifact(name: str, disk: bool = True):
+    """Turn ``build(spark, sf_dir[, path])`` into a getter
+    ``(spark, sf_dir)`` that builds once per (session, sf_dir)
+    and caches what the builder returns. A ``disk`` builder gets a
+    fresh temp dir to write under; the dir lives as long as the entry.
+    Builders fetch their dependencies by calling those getters."""
 
-    The scored-pair stream (the Σ C(w,2) explode + rollup — the
-    family's dominant stage) is materialized HERE too: the three
-    consumers (kg_similar_entities, kg_suggest_relations,
-    kg_suggest_weighted) each used to re-run it from the shared
-    postings; now they re-read one parquet. Built un-pruned (RA
-    needs every co-neighbor pair); the index's NEIGHBOR_CAP governs
-    — per-query ``cap`` args don't apply to the shared artifact."""
-    import tempfile
+    def deco(build):
+        @functools.wraps(build)
+        def get(spark: SparkSession, sf_dir: str):
+            app = spark.sparkContext.applicationId
+            key = (app, sf_dir, name)
+            with _ARTIFACT_LOCK:
+                _drop_artifacts(keep_app=app)
+                if key not in _ARTIFACTS:
+                    path = tempfile.mkdtemp(prefix=f"spark_{name}_") if disk else None
+                    args = (spark, sf_dir, path) if disk else (spark, sf_dir)
+                    try:
+                        value = build(*args)
+                    except BaseException:
+                        if path is not None:
+                            shutil.rmtree(path, ignore_errors=True)
+                        raise
+                    _ARTIFACTS[key] = (value, path)
+                return _ARTIFACTS[key][0]
 
+        get.artifact = name
+        return get
+
+    return deco
+
+
+def _read_back(spark: SparkSession, path: str, *parts: str) -> tuple:
+    return tuple(spark.read.parquet(f"{path}/{p}") for p in parts)
+
+
+def _write_neighbor_index(spark: SparkSession, rel: DataFrame, path: str) -> None:
+    """Write the (postings, names, pairs, und) neighbor index of the
+    edge set ``rel`` under ``path``. The scored-pair stream (the
+    Σ C(w,2) explode + rollup — the family's dominant stage) is
+    materialized with the postings, so consumers re-read one parquet
+    instead of re-running it."""
     from .kg import similarity
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _NBR_DIRS:
-            path = tempfile.mkdtemp(prefix="spark_kg_nbr_")
-            postings, names = similarity.neighbor_postings(g["relations"])
-            postings.write.mode("overwrite").parquet(path + "/postings")
-            names.write.mode("overwrite").parquet(path + "/names")
-            similarity.scored_pairs(
-                spark.read.parquet(path + "/postings")
-            ).write.mode("overwrite").parquet(path + "/pairs")
-            # the UNcapped undirected distinct edge set (a<b) — the
-            # exact-graph artifact the structure rollups (modularity)
-            # read; the per-call edge distinct was their whole cost
-            rel = g["relations"]
-            (
-                rel.where(F.col("source") != F.col("target"))
-                .select(
-                    F.least("source", "target").alias("a"),
-                    F.greatest("source", "target").alias("b"),
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(path + "/und")
-            )
-            # per-entity post-cap index sizes — tiny (one row per
-            # entity), stored so the incremental refresh path
-            # (kg.refresh.refresh_neighbor_index) starts from a read
-            # instead of an O(E) explode-rollup over the postings
-            (
-                spark.read.parquet(path + "/postings")
-                .select(F.explode("ids").alias("m"))
-                .select(F.col("m.nid").alias("nid"), F.col("m.sz").alias("sz"))
-                .groupBy("nid")
-                .agg(F.max("sz").alias("sz"))
-                .write.mode("overwrite")
-                .parquet(path + "/sizes")
-            )
-            _NBR_DIRS[key] = path
-        p = _NBR_DIRS[key]
-    return (
-        spark.read.parquet(p + "/postings"),
-        spark.read.parquet(p + "/names"),
-        spark.read.parquet(p + "/pairs"),
-        spark.read.parquet(p + "/und"),
-        spark.read.parquet(p + "/sizes"),
+    postings, names = similarity.neighbor_postings(rel)
+    postings.write.mode("overwrite").parquet(path + "/postings")
+    names.write.mode("overwrite").parquet(path + "/names")
+    similarity.scored_pairs(
+        spark.read.parquet(path + "/postings")
+    ).write.mode("overwrite").parquet(path + "/pairs")
+    # the UNcapped undirected distinct edge set (a<b) — the
+    # exact-graph artifact the structure rollups (modularity) read;
+    # the per-call edge distinct was their whole cost
+    (
+        rel.where(F.col("source") != F.col("target"))
+        .select(
+            F.least("source", "target").alias("a"),
+            F.greatest("source", "target").alias("b"),
+        )
+        .distinct()
+        .write.mode("overwrite")
+        .parquet(path + "/und")
     )
 
 
-def _lsh_index(spark: SparkSession, sf_dir: str, n_bits: int | None = None):
-    """Disk-backed embedding LSH signature index per (session,
-    sf_dir): four serving/dedup surfaces (ann_lsh_cosine,
-    vec_lsh_bucket_profile, dedup_embedding_lsh, dedup_semantic_keep)
-    share ONE stored index, built at the WIDEST signature
-    (lsh.MAX_BITS = 16). Plane seeds are per (table, bit), so the low
-    w bits of the stored signature equal a w-bit signature exactly —
-    each consumer masks down (``sig % 2^w``) to its own width:
-    serving keeps the narrow recall-oriented 4 bits, pair mining uses
-    the CORPUS-ADAPTIVE width (lsh.width_for_corpus — fixed-width
-    buckets grow linearly with N and the mining cap was measurably
-    dropping 100% of buckets by 2× sf0.1). At 100 TB this IS the ANN
-    index build, an ingest artifact, partitioned by table_id; the
-    row count that picks the width is parquet-footer metadata."""
-    import tempfile
+@_artifact("kg_snapshot_index_build")
+def _kg(spark: SparkSession, sf_dir: str, path: str) -> dict[str, DataFrame]:
+    store = kg_store.GraphStore(spark, path)
+    # One-time ingest, BUCKETED on each table's natural join key
+    # (entities:name, observations:entity_name, relations:source):
+    # entity⋈observation attach joins and every per-iteration
+    # rank⋈edges join in the graph algorithms read the edge side
+    # exchange-free (plan-asserted in tests/test_layout.py) — the
+    # ingest-time layout a read-heavy 100 TB KG wants.
+    store.write(kg_views.kg(load_tables(spark, sf_dir)), bucketed=True)
+    return store.read()
 
-    from .io.tables import load_tables as _lt
+
+@_artifact("nbr_postings_index_build")
+def _nbr_index(spark: SparkSession, sf_dir: str, path: str) -> tuple:
+    """Disk-backed (postings, names, scored_pairs, und, sizes)
+    neighbor index (kg/similarity.neighbor_postings) — three
+    similarity surfaces (kg_similar_entities, kg_suggest_relations,
+    kg_suggest_weighted) read a column-pruned scan instead of
+    rebuilding the edge shuffle, and an external clearCache() can't
+    unpin it. Built un-pruned (RA needs every co-neighbor pair); the
+    index's NEIGHBOR_CAP governs — per-query ``cap`` args don't apply
+    to the shared artifact."""
+    _write_neighbor_index(spark, _kg(spark, sf_dir)["relations"], path)
+    # per-entity post-cap index sizes — tiny (one row per entity),
+    # stored so the incremental refresh path
+    # (kg.refresh.refresh_neighbor_index) starts from a read instead
+    # of an O(E) explode-rollup over the postings
+    (
+        spark.read.parquet(path + "/postings")
+        .select(F.explode("ids").alias("m"))
+        .select(F.col("m.nid").alias("nid"), F.col("m.sz").alias("sz"))
+        .groupBy("nid")
+        .agg(F.max("sz").alias("sz"))
+        .write.mode("overwrite")
+        .parquet(path + "/sizes")
+    )
+    return _read_back(spark, path, "postings", "names", "pairs", "und", "sizes")
+
+
+@_artifact("lsh_signature_index_build")
+def _lsh_signatures(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     from .vector import lsh as _lsh
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _LSH_DIRS:
-            path = tempfile.mkdtemp(prefix="spark_lsh_idx_")
-            emb = _lt(spark, sf_dir)["embeddings"]
-            idx = _lsh.bucketize(emb, dim=64, n_bits=_lsh.MAX_BITS)
-            idx.write.mode("overwrite").partitionBy("table_id").parquet(path)
-            _LSH_DIRS[key] = path
-    out = spark.read.parquet(_LSH_DIRS[key]).select("vec_id", "table_id", "sig")
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    idx = _lsh.bucketize(emb, dim=64, n_bits=_lsh.MAX_BITS)
+    idx.write.mode("overwrite").partitionBy("table_id").parquet(path)
+    return spark.read.parquet(path).select("vec_id", "table_id", "sig")
+
+
+def _lsh_index(spark: SparkSession, sf_dir: str, n_bits: int | None = None):
+    """Disk-backed embedding LSH signature index: four serving/dedup
+    surfaces (ann_lsh_cosine, vec_lsh_bucket_profile,
+    dedup_embedding_lsh, dedup_semantic_keep) share ONE stored index,
+    built at the WIDEST signature (lsh.MAX_BITS = 16). Plane seeds are
+    per (table, bit), so the low w bits of the stored signature equal
+    a w-bit signature exactly — each consumer masks down
+    (``sig % 2^w``) to its own width: serving keeps the narrow
+    recall-oriented 4 bits, pair mining uses the CORPUS-ADAPTIVE width
+    (lsh.width_for_corpus — fixed-width buckets grow linearly with N
+    and the mining cap was measurably dropping 100% of buckets by 2×
+    sf0.1). At 100 TB this IS the ANN index build, an ingest artifact,
+    partitioned by table_id; the row count that picks the width is
+    parquet-footer metadata."""
+    out = _lsh_signatures(spark, sf_dir)
     if n_bits is not None:
         out = out.withColumn("sig", F.col("sig") % F.lit(1 << n_bits))
     return out
 
 
-def _lsh_pairs(spark: SparkSession, sf_dir: str):
+@_artifact("lsh_neardup_pairs_build")
+def _lsh_pairs(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
     """Disk-backed scored near-dup pair stream (vec_a, vec_b,
     cosine_sim) at τ=0.4 with the corpus-adaptive signature width —
     the artifact one level above the signature index, exactly like
     the KG scored-pair stream: FOUR dedup surfaces
     (dedup_embedding_lsh, dedup_semantic_keep,
     dedup_semantic_clusters, dedup_semantic_cluster_keep) consume the
-    identical pair set, so the bucket join + exact rescore runs once
-    per (session, sf_dir) and every consumer reads one parquet."""
-    import tempfile
-
-    from .io.tables import load_tables as _lt
+    identical pair set, so the bucket join + exact rescore runs once."""
     from .vector import lsh as _lsh
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _LSH_PAIR_DIRS:
-            path = tempfile.mkdtemp(prefix="spark_lsh_pairs_")
-            emb = _lt(spark, sf_dir)["embeddings"]
-            _lsh.near_dup_pairs_lsh(
-                emb,
-                threshold=0.4,
-                index=_lsh_index(
-                    spark, sf_dir, n_bits=_mining_bits(spark, sf_dir, 0.4)
-                ),
-            ).write.mode("overwrite").parquet(path)
-            _LSH_PAIR_DIRS[key] = path
-    return spark.read.parquet(_LSH_PAIR_DIRS[key])
+    _lsh.near_dup_pairs_lsh(
+        load_tables(spark, sf_dir)["embeddings"],
+        threshold=0.4,
+        index=_lsh_index(spark, sf_dir, n_bits=_mining_bits(spark, sf_dir, 0.4)),
+    ).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
-# Corpus size for the adaptive LSH width — one scalar metadata read
-# per (session, sf_dir) (parquet row-count footers at scale).
-_EMB_COUNTS: dict[tuple[str, str], int] = {}
+@_artifact("emb_count", disk=False)
+def _emb_count(spark: SparkSession, sf_dir: str) -> int:
+    # corpus size for the adaptive LSH width — one scalar metadata
+    # read (parquet row-count footers at scale)
+    return load_tables(spark, sf_dir)["embeddings"].count()
 
 
 def _mining_bits(spark: SparkSession, sf_dir: str, threshold: float) -> int:
@@ -274,37 +261,10 @@ def _mining_bits(spark: SparkSession, sf_dir: str, threshold: float) -> int:
     mirrored by the COUNT-driven CASE in oracles_vector."""
     from .vector import lsh as _lsh
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        if key not in _EMB_COUNTS:
-            _EMB_COUNTS[key] = load_tables(spark, sf_dir)["embeddings"].count()
     return max(
         _lsh.n_bits_for_threshold(threshold),
-        _lsh.width_for_corpus(_EMB_COUNTS[key]),
+        _lsh.width_for_corpus(_emb_count(spark, sf_dir)),
     )
-
-
-def _kg(spark: SparkSession, sf_dir: str):
-    import tempfile
-
-    t = load_tables(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _KG_CACHE:
-            path = tempfile.mkdtemp(prefix="spark_kg_store_")
-            store = kg_store.GraphStore(spark, path)
-            # One-time ingest, BUCKETED on each table's natural join
-            # key (entities:name, observations:entity_name,
-            # relations:source): entity⋈observation attach joins and
-            # every per-iteration rank⋈edges join in the graph
-            # algorithms read the edge side exchange-free
-            # (plan-asserted in tests/test_layout.py) — the
-            # ingest-time layout a read-heavy 100 TB KG wants.
-            store.write(kg_views.kg(t), bucketed=True)
-            _KG_CACHE[key] = store.read()
-            _KG_DIRS[key] = path
-        return _KG_CACHE[key], t
 
 
 # ---------------------------------------------------------------- KG
@@ -312,25 +272,25 @@ def _kg(spark: SparkSession, sf_dir: str):
 
 @query("kg_entities")
 def q_kg_entities(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return g["entities"]
 
 
 @query("kg_observations")
 def q_kg_observations(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return g["observations"]
 
 
 @query("kg_relations")
 def q_kg_relations(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return g["relations"]
 
 
 @query("kg_get_entity")
 def q_kg_get_entity(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     name = "Customer#000000042"
     e = g["entities"].where(F.col("name") == name)
     o = (
@@ -350,7 +310,7 @@ def q_kg_get_entity(spark, sf_dir):
 
 @query("kg_search_entities")
 def q_kg_search_entities(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.search_entities(
         g["entities"], g["observations"], "customer", limit=50
     )
@@ -358,7 +318,7 @@ def q_kg_search_entities(spark, sf_dir):
 
 @query("kg_search_fuzzy")
 def q_kg_search_fuzzy(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.search_entities(
         g["entities"], g["observations"], "middle east", limit=10
     )
@@ -366,19 +326,19 @@ def q_kg_search_fuzzy(spark, sf_dir):
 
 @query("kg_recent_entities")
 def q_kg_recent_entities(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.get_recent_entities(g["entities"], 10)
 
 
 @query("kg_read_graph")
 def q_kg_read_graph(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.read_graph(g["entities"], g["relations"], 10)
 
 
 @query("kg_search_nodes")
 def q_kg_search_nodes(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.search_nodes(
         g["entities"], g["observations"], g["relations"], "economy", limit=10
     )
@@ -386,7 +346,8 @@ def q_kg_search_nodes(spark, sf_dir):
 
 @query("kg_create_entities")
 def q_kg_create_entities(spark, sf_dir):
-    g, t = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
     batch_e = t["customer"].where(F.col("c_custkey") <= 5).select(
         F.col("c_name").alias("name"),
         F.lit("vip_customer").alias("entity_type"),
@@ -405,7 +366,8 @@ def q_kg_create_entities(spark, sf_dir):
 
 @query("kg_create_relations")
 def q_kg_create_relations(spark, sf_dir):
-    g, t = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
     batch = (
         t["supplier"]
         .join(broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -421,7 +383,7 @@ def q_kg_create_relations(spark, sf_dir):
 
 @query("kg_search_entities_full")
 def q_kg_search_entities_full(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.search_entities_full(
         g["entities"], g["observations"], "middle east", limit=10
     )
@@ -429,19 +391,20 @@ def q_kg_search_entities_full(spark, sf_dir):
 
 @query("kg_recent_entities_full")
 def q_kg_recent_entities_full(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.get_recent_entities_full(g["entities"], g["observations"], 10)
 
 
 @query("kg_read_graph_entities")
 def q_kg_read_graph_entities(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.get_recent_entities_full(g["entities"], g["observations"], 25)
 
 
 @query("kg_delete_entity")
 def q_kg_delete_entity(spark, sf_dir):
-    g, t = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
     names = t["customer"].where(F.col("c_custkey") <= 3).select(
         F.col("c_name").alias("name")
     )
@@ -453,7 +416,8 @@ def q_kg_delete_entity(spark, sf_dir):
 
 @query("kg_delete_relation")
 def q_kg_delete_relation(spark, sf_dir):
-    g, t = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
     batch = (
         t["nation"]
         .join(broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
@@ -469,13 +433,14 @@ def q_kg_delete_relation(spark, sf_dir):
 
 @query("kg_degree")
 def q_kg_degree(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.degree(g["relations"])
 
 
 @query("kg_neighbors_2hop")
 def q_kg_neighbors_2hop(spark, sf_dir):
-    g, t = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
+    t = load_tables(spark, sf_dir)
     seeds = t["supplier"].where(F.col("s_suppkey") == 1).select(
         F.col("s_name").alias("name")
     )
@@ -484,7 +449,7 @@ def q_kg_neighbors_2hop(spark, sf_dir):
 
 @query("kg_entity_type_counts")
 def q_kg_entity_type_counts(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.entity_type_counts(g["entities"])
 
 
@@ -767,13 +732,13 @@ def q_events_funnel(spark, sf_dir):
 
 @query("kg_relation_type_counts")
 def q_kg_relation_type_counts(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.relation_type_counts(g["relations"])
 
 
 @query("kg_observation_counts")
 def q_kg_observation_counts(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.observation_counts(g["entities"], g["observations"])
 
 
@@ -782,7 +747,7 @@ def q_kg_pagerank(spark, sf_dir):
     # iterative, but the 5-iteration loop is UNROLLED in the oracle
     # (oracles_kg._PR_BODY) — fully hash-gated; convergence/sum
     # invariants additionally covered in tests/test_kg2.py
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.pagerank(g["relations"], iterations=5)
 
 
@@ -861,7 +826,7 @@ def q_kg_components(spark, sf_dir):
     # iterative HashMin, oracle-gated against a recursive-CTE ground
     # truth (labels are exact strings; 8 rounds > graph diameter, so
     # the propagation has converged); invariants in tests/test_kg2.py
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.connected_components(g["relations"])
 
 
@@ -878,7 +843,7 @@ def q_dedup_minhash_est(spark, sf_dir):
 
 @query("kg_search_typed")
 def q_kg_search_typed(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.search_entities(
         g["entities"].where(F.col("entity_type") == "part"),
         g["observations"],
@@ -957,7 +922,7 @@ def q_text_top_terms(spark, sf_dir):
 
 @query("kg_isolated")
 def q_kg_isolated(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.isolated_entities(g["entities"], g["relations"])
 
 
@@ -1004,29 +969,13 @@ def q_text_length_histogram(spark, sf_dir):
 # TF-IDF model: fitted ONCE per (session, sf_dir) — the serve path
 # never refits (an index-build job owns fitting at scale); doc
 # vectors persist for reuse across queries.
-_TFIDF_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_artifact("tfidf_index", disk=False)
 def _tfidf_index(spark, sf_dir):
     from .vector import embed
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        if key not in _TFIDF_CACHE:
-            docs = load_tables(spark, sf_dir)["documents"]
-            pipeline = embed.fit_tfidf(docs)
-            doc_vecs = embed.embed_documents(docs, pipeline).persist()
-            _TFIDF_CACHE[key] = (pipeline, doc_vecs)
-    pipeline, doc_vecs = _TFIDF_CACHE[key]
-    # Self-heal against an external spark.catalog.clearCache() (bench.py
-    # issues one between queries): the dict would otherwise keep handing
-    # out an unpersisted handle that recomputes the full transform on
-    # every downstream action. persist() on an unpersisted DataFrame
-    # just re-registers it.
-    lvl = doc_vecs.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        doc_vecs.persist()
-    return pipeline, doc_vecs
+    docs = load_tables(spark, sf_dir)["documents"]
+    pipeline = embed.fit_tfidf(docs)
+    return pipeline, embed.embed_documents(docs, pipeline).persist()
 
 
 @query("text_semantic_search")
@@ -1038,6 +987,14 @@ def q_text_semantic_search(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     pipeline, doc_vecs = _tfidf_index(spark, sf_dir)
+    # Self-heal against an external spark.catalog.clearCache() (bench.py
+    # issues one between queries): the cache would otherwise keep
+    # handing out an unpersisted handle that recomputes the full
+    # transform on every downstream action. persist() on an
+    # unpersisted DataFrame just re-registers it.
+    lvl = doc_vecs.storageLevel
+    if not (lvl.useMemory or lvl.useDisk):
+        doc_vecs.persist()
     return embed.semantic_search(
         t["documents"],
         "hash join filter on the customer table with vector scan window",
@@ -1198,7 +1155,7 @@ def q_events_percentiles(spark, sf_dir):
 
 @query("kg_bfs_depth")
 def q_kg_bfs_depth(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.bfs_depths(
         g["relations"], seed="Customer#000000042", max_hops=3
     )
@@ -1482,7 +1439,7 @@ def q_text_rarity(spark, sf_dir):
 def q_kg_similar_minhash(spark, sf_dir):
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.similar_entities_minhash(g["relations"], min_est=0.25)
 
 
@@ -1496,9 +1453,9 @@ def q_events_transitions(spark, sf_dir):
 def q_kg_similar_entities(spark, sf_dir):
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.similar_entities(
-        g["relations"], threshold=0.1, index=_nbr_index(spark, sf_dir, g)
+        g["relations"], threshold=0.1, index=_nbr_index(spark, sf_dir)
     )
 
 
@@ -1538,19 +1495,19 @@ def q_events_sliding(spark, sf_dir):
 
 @query("kg_schema_profile")
 def q_kg_schema_profile(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.schema_profile(g["entities"], g["relations"])
 
 
 @query("kg_degree_histogram")
 def q_kg_degree_histogram(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.degree_histogram(g["relations"])
 
 
 @query("kg_triangles")
 def q_kg_triangles(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.triangle_stats(g["relations"])
 
 
@@ -1746,7 +1703,7 @@ def q_kg_k_core(spark, sf_dir):
     # (oracles_kg._KCORE_BODY, 12 materialized rounds) — fully
     # hash-gated; membership/maximality invariants additionally
     # covered in tests/test_kg2.py
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.k_core(g["relations"], k=3)
 
 
@@ -1775,6 +1732,15 @@ def q_mm_image_patches(spark, sf_dir):
     return mm.image_patches(mm.synthesize_media(t["documents"]))
 
 
+@_artifact("quality_model", disk=False)
+def _quality_model(spark, sf_dir):
+    """The fitted (assembler, model) pair — fitted on first use, then
+    shared by every call in the session."""
+    from .textops import classifier
+
+    return classifier.fit_quality_model(load_tables(spark, sf_dir)["documents"])
+
+
 @query("text_quality_classifier")
 def q_text_quality_classifier(spark, sf_dir):
     # MLlib fit is iterative — no SQL oracle (rows-only gate);
@@ -1782,9 +1748,8 @@ def q_text_quality_classifier(spark, sf_dir):
     from .textops import classifier
 
     t = load_tables(spark, sf_dir)
-    return classifier.quality_scores(
-        t["documents"],
-        cache_key=f"{spark.sparkContext.applicationId}:{sf_dir}",
+    return classifier.score_with_model(
+        t["documents"], *_quality_model(spark, sf_dir)
     )
 
 
@@ -1792,7 +1757,7 @@ def q_text_quality_classifier(spark, sf_dir):
 def q_kg_entity_neardup(spark, sf_dir):
     from .kg import similarity as kg_sim
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_sim.entity_name_neardup(g["entities"], threshold=0.6)
 
 
@@ -1800,7 +1765,7 @@ def q_kg_entity_neardup(spark, sf_dir):
 def q_kg_merge_entities(spark, sf_dir):
     from .kg import similarity as kg_sim
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_sim.merge_candidates(g["entities"], threshold=0.6)
 
 
@@ -1824,7 +1789,7 @@ def q_dedup_containment(spark, sf_dir):
 
 @query("kg_growth")
 def q_kg_growth(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return (
         g["entities"]
         .groupBy(
@@ -1896,7 +1861,7 @@ def q_events_type_pivot(spark, sf_dir):
 
 @query("kg_obs_history")
 def q_kg_obs_history(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.observation_history(g["observations"])
 
 
@@ -1914,7 +1879,7 @@ def q_dedup_shingle_profile(spark, sf_dir):
 
 @query("kg_reciprocity")
 def q_kg_reciprocity(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.relation_reciprocity(g["relations"])
 
 
@@ -1944,7 +1909,7 @@ def q_dedup_inflation(spark, sf_dir):
 
 @query("kg_assortativity")
 def q_kg_assortativity(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.type_assortativity(g["entities"], g["relations"])
 
 
@@ -1969,7 +1934,7 @@ def q_events_gap_histogram(spark, sf_dir):
 
 @query("kg_degree_assortativity")
 def q_kg_degree_assortativity(spark, sf_dir):
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.degree_assortativity(g["relations"])
 
 
@@ -1996,7 +1961,7 @@ def q_kg_ppr(spark, sf_dir):
     # personalized PageRank from the supplier seed set — iterative,
     # but the 5-iteration loop is UNROLLED in the oracle (fully
     # hash-gated, same IEEE discipline as kg_pagerank)
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     seeds = g["entities"].where(
         F.col("entity_type") == "supplier"
     ).select("name")
@@ -2009,47 +1974,30 @@ def q_kg_ppr(spark, sf_dir):
 # computed once per (session, sf_dir), persisted, and shared by the
 # communities and modularity queries instead of re-propagating 4
 # rounds per call.
-_LPA_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def _lpa(spark, sf_dir, g):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        if key not in _LPA_CACHE:
-            # eager localCheckpoint, not persist(): TRUNCATES the
-            # lineage, so downstream consumers (kg_modularity's two
-            # rollups) plan over a block scan instead of re-deriving
-            # the 4 propagation rounds — r03's census showed 22
-            # shuffles in kg_modularity's plan vs ≤9 for every other
-            # graph op, all lineage inflation. Checkpoint blocks also
-            # survive catalog.clearCache() (RDD storage, not SQL
-            # cache), so no self-heal repersist needed.
-            df = kg_traverse.label_propagation(
-                g["relations"], iterations=4
-            ).localCheckpoint(eager=True)
-            # count once at ingest (a block-scan job over the fresh
-            # checkpoint) so modularity's broadcast gate takes the
-            # cardinality HINT instead of re-copying + re-counting the
-            # artifact per call (r07 ADVICE item)
-            _LPA_COUNTS[key] = df.count()
-            _LPA_CACHE[key] = df
-        return _LPA_CACHE[key]
-
-
-_LPA_COUNTS: dict[tuple[str, str], int] = {}
-
-
-def _lpa_count(spark, sf_dir, g) -> int:
-    _lpa(spark, sf_dir, g)
-    return _LPA_COUNTS[(spark.sparkContext.applicationId, sf_dir)]
+@_artifact("lpa_labels_index_build", disk=False)
+def _lpa(spark, sf_dir) -> tuple[DataFrame, int]:
+    # eager localCheckpoint, not persist(): TRUNCATES the lineage, so
+    # downstream consumers (kg_modularity's two rollups) plan over a
+    # block scan instead of re-deriving the 4 propagation rounds —
+    # r03's census showed 22 shuffles in kg_modularity's plan vs ≤9
+    # for every other graph op, all lineage inflation. Checkpoint
+    # blocks also survive catalog.clearCache() (RDD storage, not SQL
+    # cache), so no self-heal repersist needed.
+    df = kg_traverse.label_propagation(
+        _kg(spark, sf_dir)["relations"], iterations=4
+    ).localCheckpoint(eager=True)
+    # count once at ingest (a block-scan job over the fresh
+    # checkpoint) so modularity's broadcast gate takes the cardinality
+    # HINT instead of re-copying + re-counting the artifact per call
+    # (r07 ADVICE item)
+    return df, df.count()
 
 
 @query("kg_communities")
 def q_kg_communities(spark, sf_dir):
     # deterministic synchronous label propagation, 4 rounds unrolled
     # in the oracle — integer/string math only, fully hash-gated
-    g, _ = _kg(spark, sf_dir)
-    return _lpa(spark, sf_dir, g)
+    return _lpa(spark, sf_dir)[0]
 
 
 @query("vec_hard_negatives")
@@ -2106,15 +2054,15 @@ def q_kg_modularity(spark, sf_dir):
     # partition-quality profile of kg_communities — full oracle;
     # reads BOTH ingest artifacts (LPA labels + the materialized
     # undirected edge set) so the per-query plan is one rollup
-    g, _ = _kg(spark, sf_dir)
+    labels, n_labels = _lpa(spark, sf_dir)
     return kg_traverse.community_modularity(
-        g["relations"],
+        _kg(spark, sf_dir)["relations"],
         iterations=4,
-        labels=_lpa(spark, sf_dir, g),
-        und=_nbr_index(spark, sf_dir, g)[3],
+        labels=labels,
+        und=_nbr_index(spark, sf_dir)[3],
         # cardinality hint: the labels artifact is checkpointed and
         # counted at ingest — no per-call copy or count job
-        n_labels=_lpa_count(spark, sf_dir, g),
+        n_labels=n_labels,
     )
 
 
@@ -2129,7 +2077,7 @@ def q_events_sample_est(spark, sf_dir):
 @query("kg_obs_duplicates")
 def q_kg_obs_duplicates(spark, sf_dir):
     # boilerplate-observation hygiene scan — full oracle
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.observation_duplicates(g["observations"])
 
 
@@ -2170,7 +2118,7 @@ def q_mm_dedup(spark, sf_dir):
 def q_kg_context_pack(spark, sf_dir):
     # char-budgeted LLM-context packing of search results (the MCP
     # payload shape, greedily cut to budget) — full oracle
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_search.context_pack(
         g["entities"], g["observations"], "economy",
         budget_chars=2000, limit=50,
@@ -2209,7 +2157,7 @@ def q_vec_rp_distortion(spark, sf_dir):
 @query("kg_as_of")
 def q_kg_as_of(spark, sf_dir):
     # point-in-time read over SCD2 observation intervals — full oracle
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.graph_as_of(
         g["entities"], g["observations"], t=10500
     )
@@ -2237,7 +2185,7 @@ def q_text_readability(spark, sf_dir):
 def q_kg_metapaths(spark, sf_dir):
     # typed 2-hop metapath census via in×out count products — full
     # oracle, never materializes paths
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.metapath_census(g["entities"], g["relations"])
 
 
@@ -2303,9 +2251,9 @@ def q_kg_suggest_relations(spark, sf_dir):
     # link-prediction suggestion feed (similar but unconnected pairs)
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.suggest_relations(
-        g["relations"], threshold=0.1, k=25, index=_nbr_index(spark, sf_dir, g)
+        g["relations"], threshold=0.1, k=25, index=_nbr_index(spark, sf_dir)
     )
 
 
@@ -2315,9 +2263,9 @@ def q_kg_suggest_weighted(spark, sf_dir):
     # oracle (sorted-weight fold order mirrored in SQL)
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.suggest_relations_weighted(
-        g["relations"], k=25, index=_nbr_index(spark, sf_dir, g)
+        g["relations"], k=25, index=_nbr_index(spark, sf_dir)
     )
 
 
@@ -2325,7 +2273,7 @@ def q_kg_suggest_weighted(spark, sf_dir):
 def q_kg_walks(spark, sf_dir):
     # deterministic DeepWalk corpus generation — full oracle (4 md5-
     # indexed steps unrolled in SQL)
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.random_walks(g["relations"], length=4)
 
 
@@ -2334,7 +2282,7 @@ def q_kg_pagerank_full(spark, sf_dir):
     # dangling-redistributed PageRank (the published formulation;
     # kg_pagerank keeps the documented leaking variant) — FULL oracle
     # with the 5 damped iterations + per-round dangling sums unrolled
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.pagerank_full(g["relations"], iterations=5)
 
 
@@ -2342,7 +2290,7 @@ def q_kg_pagerank_full(spark, sf_dir):
 def q_kg_hits(spark, sf_dir):
     # integer-exact unnormalized HITS, 2 rounds unrolled in the
     # oracle — full oracle (BIGINT path counts, no double sums)
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.hits(g["relations"], iterations=2)
 
 
@@ -2403,7 +2351,7 @@ def q_orders_backlog(spark, sf_dir):
 @query("kg_obs_staleness")
 def q_kg_obs_staleness(spark, sf_dir):
     # memory-staleness histogram — full oracle
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return kg_traverse.observation_staleness(
         g["entities"], g["observations"]
     )
@@ -2414,7 +2362,7 @@ def q_kg_suggest_minhash(spark, sf_dir):
     # suggestion feed on the MinHash signature index (scale path)
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.suggest_relations_minhash(
         g["relations"], min_est=0.25, k=25
     )
@@ -2610,7 +2558,7 @@ def q_kg_similar_content(spark, sf_dir):
     # oracle (same postings/DF-cap plan as dedup_ngram_jaccard)
     from .kg import similarity
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     return similarity.similar_entities_content(g["observations"])
 
 
@@ -2672,79 +2620,49 @@ def _refresh_split(rel):
     return rel.where(~is_delta), rel.where(is_delta)
 
 
-def _refresh_base(spark: SparkSession, sf_dir: str):
+def _neardup_split(emb):
+    """vec_id%19 base/delta split of the embeddings for
+    vec_neardup_refresh: the ~95% base the stored old index is built
+    on, and the ~5% delta the refresh merges in."""
+    is_delta = F.pmod(F.col("vec_id"), F.lit(19)) == 0
+    return emb.where(~is_delta), emb.where(is_delta)
+
+
+@_artifact("refresh_base_build")
+def _refresh_base(spark: SparkSession, sf_dir: str, path: str):
     """Disk-backed BASE-split artifacts for the refresh twins:
     (postings, names, pairs, und) of the md5-bucketed 95%% slice plus
-    the 5%% delta slice, built once per (session, sf_dir) and read
-    back from parquet — the exact shape of the production old index
-    (and heap-free: the gate session runs with a 1g vanilla driver)."""
-    import tempfile
-
-    from .kg import similarity
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _REFRESH_BASE_DIRS:
-            path = tempfile.mkdtemp(prefix="spark_refresh_base_")
-            g, _ = _kg(spark, sf_dir)
-            base, delta = _refresh_split(g["relations"])
-            postings, names = similarity.neighbor_postings(base)
-            postings.write.mode("overwrite").parquet(path + "/postings")
-            names.write.mode("overwrite").parquet(path + "/names")
-            similarity.scored_pairs(
-                spark.read.parquet(path + "/postings")
-            ).write.mode("overwrite").parquet(path + "/pairs")
-            (
-                base.where(F.col("source") != F.col("target"))
-                .select(
-                    F.least("source", "target").alias("a"),
-                    F.greatest("source", "target").alias("b"),
-                )
-                .distinct()
-                .write.mode("overwrite")
-                .parquet(path + "/und")
-            )
-            delta.write.mode("overwrite").parquet(path + "/delta")
-            _REFRESH_BASE_DIRS[key] = path
-        p = _REFRESH_BASE_DIRS[key]
-    return (
-        spark.read.parquet(p + "/postings"),
-        spark.read.parquet(p + "/names"),
-        spark.read.parquet(p + "/pairs"),
-        spark.read.parquet(p + "/und"),
-        spark.read.parquet(p + "/delta"),
-    )
+    the 5%% delta slice, read back from parquet — the exact shape of
+    the production old index (and heap-free: a persisted pair stream
+    OOM'd the vanilla 1g gate session)."""
+    base, delta = _refresh_split(_kg(spark, sf_dir)["relations"])
+    _write_neighbor_index(spark, base, path)
+    delta.write.mode("overwrite").parquet(path + "/delta")
+    return _read_back(spark, path, "postings", "names", "pairs", "und", "delta")
 
 
-def _neardup_base(spark: SparkSession, sf_dir: str, base, bits: int):
+@_artifact("neardup_base_build")
+def _neardup_base(spark: SparkSession, sf_dir: str, path: str):
     """Disk-backed BASE-split artifacts for vec_neardup_refresh: the
-    95% slice's signature index and scored pair stream, built once
-    per (session, sf_dir) and read back from parquet — the embedding
-    twin of :func:`_refresh_base` (the refresh consumes a STORED old
-    index; rebuilding it per invocation timed the wrong thing)."""
-    import tempfile
-
+    95% slice's signature index and scored pair stream, read back from
+    parquet — the embedding twin of :func:`_refresh_base` (the refresh
+    consumes a STORED old index; rebuilding it per invocation timed
+    the wrong thing). Width pinned to the GROWN corpus (the refresh
+    contract; the oracle's COUNT-driven CASE sees the full table
+    either way)."""
     from .vector import lsh as _lsh
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        _evict_stale(key[0])
-        if key not in _NEARDUP_BASE_DIRS:
-            path = tempfile.mkdtemp(prefix="spark_neardup_base_")
-            idx = _lsh.bucketize(base, dim=64, n_bits=bits)
-            idx.write.mode("overwrite").parquet(path + "/idx")
-            _lsh.near_dup_pairs_lsh(
-                base,
-                threshold=0.4,
-                index=spark.read.parquet(path + "/idx"),
-            ).write.mode("overwrite").parquet(path + "/pairs")
-            _NEARDUP_BASE_DIRS[key] = path
-        p = _NEARDUP_BASE_DIRS[key]
-    return (
-        spark.read.parquet(p + "/idx"),
-        spark.read.parquet(p + "/pairs"),
+    base, _ = _neardup_split(load_tables(spark, sf_dir)["embeddings"])
+    bits = _mining_bits(spark, sf_dir, 0.4)
+    _lsh.bucketize(base, dim=64, n_bits=bits).write.mode("overwrite").parquet(
+        path + "/idx"
     )
+    _lsh.near_dup_pairs_lsh(
+        base,
+        threshold=0.4,
+        index=spark.read.parquet(path + "/idx"),
+    ).write.mode("overwrite").parquet(path + "/pairs")
+    return _read_back(spark, path, "idx", "pairs")
 
 
 @query("kg_postings_refresh")
@@ -2856,14 +2774,8 @@ def q_vec_neardup_refresh(spark, sf_dir):
     # wall spent re-deriving the base every bench rep).
     from .vector import lsh as _lsh
 
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
-    base = emb.where(F.pmod(F.col("vec_id"), F.lit(19)) != 0)
-    delta = emb.where(F.pmod(F.col("vec_id"), F.lit(19)) == 0)
-    # width pinned to the GROWN corpus (the refresh contract; the
-    # oracle's COUNT-driven CASE sees the full table either way)
-    bits = _mining_bits(spark, sf_dir, 0.4)
-    old_idx, old_pairs = _neardup_base(spark, sf_dir, base, bits)
+    base, delta = _neardup_split(load_tables(spark, sf_dir)["embeddings"])
+    old_idx, old_pairs = _neardup_base(spark, sf_dir)
     return _lsh.refresh_pairs(
         old_idx,
         old_pairs,
@@ -2871,7 +2783,7 @@ def q_vec_neardup_refresh(spark, sf_dir):
         delta,
         threshold=0.4,
         dim=64,
-        n_bits=bits,
+        n_bits=_mining_bits(spark, sf_dir, 0.4),
         # the gate VERIFIES the append-only contract the exactness
         # proof assumes (one early-exit semi probe); production
         # ingest that guarantees disjointness skips the scan
@@ -2918,7 +2830,7 @@ def q_index_refresh_plan(spark, sf_dir):
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     rel = g["relations"]
 
     def width_of(n):
@@ -3055,9 +2967,7 @@ def q_index_refresh_plan(spark, sf_dir):
     )
 
 
-_LPA_HIST_CACHE: dict[tuple[str, str], tuple] = {}
-
-
+@_artifact("lpa_hist_base_build", disk=False)
 def _lpa_hist_base(spark, sf_dir):
     """Stored-artifact shape for the LPA refresh twin: the 95% base
     split's per-round label HISTORY (kg/refresh.py
@@ -3066,17 +2976,10 @@ def _lpa_hist_base(spark, sf_dir):
     edge set, checkpoint-materialized once per (session, sf_dir)."""
     from .kg import refresh as kgr
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _INDEX_LOCK:
-        if key not in _LPA_HIST_CACHE:
-            g, _ = _kg(spark, sf_dir)
-            base, delta = _refresh_split(g["relations"])
-            hist = kgr.label_propagation_history(base, 4).localCheckpoint(
-                eager=True
-            )
-            edges = kgr._sym_edges(base).localCheckpoint(eager=True)
-            _LPA_HIST_CACHE[key] = (hist, edges, delta)
-        return _LPA_HIST_CACHE[key]
+    base, delta = _refresh_split(_kg(spark, sf_dir)["relations"])
+    hist = kgr.label_propagation_history(base, 4).localCheckpoint(eager=True)
+    edges = kgr._sym_edges(base).localCheckpoint(eager=True)
+    return hist, edges, delta
 
 
 @query("kg_lpa_refresh")
@@ -3101,3 +3004,16 @@ def q_kg_lpa_refresh(spark, sf_dir):
     return labels.join(sizes, "community").select(
         "name", "community", "community_size"
     )
+
+
+# The shared builds bench.py times as their own lines, in build order.
+_INDEX_BUILDS = (
+    _kg,
+    _nbr_index,
+    _lsh_signatures,
+    _lpa,
+    _lsh_pairs,
+    _refresh_base,
+    _neardup_base,
+    _lpa_hist_base,
+)

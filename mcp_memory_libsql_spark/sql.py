@@ -39,7 +39,7 @@ def register_views(
     if kg:
         from .registry import _kg
 
-        g, _ = _kg(spark, sf_dir)
+        g = _kg(spark, sf_dir)
         for n, df in g.items():
             view = f"kg_{n}"
             df.createOrReplaceTempView(view)

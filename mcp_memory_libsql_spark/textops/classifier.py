@@ -12,9 +12,9 @@ real labels exist.
 Scale: LogisticRegression over assembled quality signals is a few
 L-BFGS passes of tree-aggregated gradients (MLlib's distributed
 path); scoring is a broadcast of the fitted coefficients into a
-single narrow projection — no shuffle. The model is fit ONCE per
-(session, data) and cached, the same fit-once contract as the TF-IDF
-pipeline in ``vector/embed.py``.
+single narrow projection — no shuffle. The registry fits the model
+ONCE per (session, data) and scores with the cached pair, the same
+fit-once contract as the TF-IDF pipeline in ``vector/embed.py``.
 """
 
 from __future__ import annotations
@@ -30,8 +30,6 @@ FEATURES = [
     "stopword_ratio",
     "upper_ratio",
 ]
-
-_MODEL_CACHE: dict[str, object] = {}
 
 
 def _weak_label() -> F.Column:
@@ -94,16 +92,7 @@ def score_with_model(documents: DataFrame, asm, model) -> DataFrame:
     )
 
 
-def quality_scores(
-    documents: DataFrame, cache_key: str | None = None
-) -> DataFrame:
+def quality_scores(documents: DataFrame) -> DataFrame:
     """(doc_id, weak_label, score, prediction): per-doc quality
-    probability from the fitted model. ``cache_key`` enables the
-    fit-once path across repeated calls in one session."""
-    if cache_key is not None and cache_key in _MODEL_CACHE:
-        asm, model = _MODEL_CACHE[cache_key]
-    else:
-        asm, model = fit_quality_model(documents)
-        if cache_key is not None:
-            _MODEL_CACHE[cache_key] = (asm, model)
-    return score_with_model(documents, asm, model)
+    probability from a model fitted on ``documents``."""
+    return score_with_model(documents, *fit_quality_model(documents))

@@ -164,7 +164,7 @@ def minhash_signatures(documents: DataFrame, n: int = 3) -> DataFrame:
     the 100 TB CPU path (no digest schedule per shingle); md5 stays
     the default because the DuckDB gate needs it.
 
-    Plan (r09, tools/ab_minhash_lsh.py with exceptAll equality
+    Plan (r09, OPTIMIZATION_r09.md A/B with exceptAll equality
     gates): the digest family is computed once per DISTINCT shingle
     on the aggregated posting-list row, not once per (doc, shingle)
     occurrence, before exploding the ids back out into the per-doc
@@ -698,7 +698,7 @@ def substring_fingerprints(
 
     Window keys default to conv-folded 60-bit BIGINTs (md5_hash60) —
     flipped from hex strings by the r08 300× A/B (VERDICT r07 item
-    6, tools/ab_substring_keys.py): the r07 30× A/B had kept hex
+    6, OPTIMIZATION_r09.md): the r07 30× A/B had kept hex
     (5.5s vs 6.3s) because shuffle still fit page cache; at the
     300×-equivalent SPILL point the 8-byte key vs the ~36-byte hex
     string is disk bandwidth, measured 269.3s → 173.2s (1.56×,

@@ -202,7 +202,7 @@ def pair_combos(ids, a: str = "a", b: str = "b"):
 def substr_bigint_keys() -> bool:
     """Substring-dedup window keys as conv-folded 60-bit BIGINTs
     (md5_hash60) instead of 32-char md5 hex strings — the DEFAULT
-    since the r08 300× A/B (tools/ab_substring_keys.py, fresh session
+    since the r08 300× A/B (OPTIMIZATION_r09.md, fresh session
     per variant, shuffle bytes from the REST API): at the spill
     regime the 8-byte key cut dedup_substring's wall 269.3s → 173.2s
     (1.56× averaged over both run orders, the artifact's decision

@@ -850,7 +850,7 @@ def test_pagerank_full_cadence_invariant(spark, t, monkeypatch):
     """The lineage-cut cadence (PAGERANK_CKPT_EVERY, r09) is a plan
     artifact, not semantics: rank rows must be identical at every
     cadence. Pins the equality the r09 A/B
-    (tools/ab_pagerank_cadence.py) gated before restoring the
+    (OPTIMIZATION_r09.md) gated before restoring the
     per-round cut."""
     from mcp_memory_libsql_spark.kg import traverse
 

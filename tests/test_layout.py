@@ -224,7 +224,7 @@ def test_kg_snapshot_edge_iteration_is_exchange_free(spark, sf_dir):
     the bucketed scan."""
     from mcp_memory_libsql_spark.registry import _kg
 
-    g, _ = _kg(spark, sf_dir)
+    g = _kg(spark, sf_dir)
     edges = g["relations"].select("source", "target").distinct()
     out_deg = edges.groupBy("source").agg(F.count("*").alias("out_degree"))
     edges_w = edges.join(out_deg, "source")

@@ -293,8 +293,8 @@ def index_refresh_point(
 
     nbr_refresh = nbr_rebuild = lsh_refresh = lsh_rebuild = None
     if not pairs_only:
-        g, _ = reg._kg(spark, dst)
-        postings, names, pairs, und, sizes = reg._nbr_index(spark, dst, g)
+        g = reg._kg(spark, dst)
+        postings, names, pairs, und, sizes = reg._nbr_index(spark, dst)
 
         t0 = time.time()
         new_p, new_n, new_pairs, new_und = refresh_neighbor_index(
@@ -635,7 +635,7 @@ def lpa_sparse_point(spark, dst: str, copies: int,
     ).localCheckpoint(eager=True)
     n_sparse = d_sparse.count()
 
-    g, _ = reg._kg(spark, dst)
+    g = reg._kg(spark, dst)
     t0 = time.time()
     hist = kgr.label_propagation_history(g["relations"], 4).localCheckpoint(
         eager=True
@@ -1120,16 +1120,16 @@ def main() -> None:
             # unattributable to a specific index before.
             parts: dict[str, float] = {}
             t0 = time.time()
-            g, _ = reg._kg(spark, dst)
+            reg._kg(spark, dst)
             parts["kg_snapshot"] = round(time.time() - t0, 1)
             t0 = time.time()
-            reg._nbr_index(spark, dst, g)
+            reg._nbr_index(spark, dst)
             parts["nbr_postings"] = round(time.time() - t0, 1)
             t0 = time.time()
             reg._lsh_index(spark, dst)
             parts["lsh_signature"] = round(time.time() - t0, 1)
             t0 = time.time()
-            reg._lpa(spark, dst, g)
+            reg._lpa(spark, dst)
             parts["lpa_labels"] = round(time.time() - t0, 1)
             t0 = time.time()
             reg._lsh_pairs(spark, dst)
