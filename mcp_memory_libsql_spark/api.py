@@ -27,6 +27,18 @@ Per-call semantics mirrored:
 created_at is a monotonic batch stamp (one tick per write) — the
 batch-engine stand-in for the reference's datetime('now') that keeps
 recency ordering exact and deterministic.
+
+Per-call cost is kept to jobs that move data:
+- every batch a call sends to Spark is JVM-local: built as an Arrow
+  table (``kg.store._local_frame``), it plans as a ``LocalRelation``,
+  so no job over it starts Python workers;
+- replies are filtered in Spark but ordered on the driver: a reply's
+  observation and relation rows are few, so sorting them in Python by
+  the same keys costs less than a range-partition shuffle.
+
+Every string argument has its lone surrogates (valid JSON escapes
+such as ``"\\ud800"`` that encode no character) replaced with U+FFFD
+before use — the form the store holds them in.
 """
 
 from __future__ import annotations
@@ -37,7 +49,7 @@ import unicodedata
 from pyspark.sql import SparkSession
 
 from .kg import search as kg_search
-from .kg.store import SCHEMAS, GraphStore
+from .kg.store import SCHEMAS, GraphStore, _local_frame
 from .sanitize import (
     MAX_ENTITY_NAME_LENGTH,
     MAX_ENTITY_TYPE_LENGTH,
@@ -45,6 +57,21 @@ from .sanitize import (
     MAX_OBSERVATIONS_PER_ENTITY,
     MAX_RELATION_TYPE_LENGTH,
 )
+
+_DELETE_NAMES_SCHEMA = GraphStore.DELTA_OPS["delete_entities"][0]["names"]
+_LONE_SURROGATE = re.compile("[\ud800-\udfff]")
+
+
+def _scrub(x):
+    """``x`` with lone surrogates replaced by U+FFFD if it is a
+    string, else ``x`` unchanged (validation rejects it later)."""
+    return _LONE_SURROGATE.sub("\ufffd", x) if isinstance(x, str) else x
+
+
+def _sorted(rows, *cols: str) -> list:
+    """``rows`` in ``orderBy(*cols)`` order: ascending, nulls first."""
+    return sorted(rows, key=lambda r: [(r[c] is not None, r[c]) for c in cols])
+
 
 def _edge(ch: str) -> bool:
     # \s plus Unicode Z* — the Python twin of sanitize_col's
@@ -95,13 +122,13 @@ class MemoryClient:
         ts = self._stamp()
         ent_rows, obs_rows = [], []
         for e in entities:
-            name = e.get("name")
+            name = _scrub(e.get("name"))
             if not isinstance(name, str) or name.strip() == "":
                 raise ValueError("Entity name must be a non-empty string")
             safe_name = sanitize_text(name, MAX_ENTITY_NAME_LENGTH)
             if safe_name == "":
                 raise ValueError("Entity name is empty after sanitization")
-            etype = e.get("entityType")
+            etype = _scrub(e.get("entityType"))
             if not isinstance(etype, str) or etype.strip() == "":
                 raise ValueError(
                     f'Invalid entity type for entity "{safe_name}"'
@@ -123,7 +150,7 @@ class MemoryClient:
                     f"{MAX_OBSERVATIONS_PER_ENTITY} observations"
                 )
             safe_obs = []
-            for o in obs:
+            for o in map(_scrub, obs):
                 if not isinstance(o, str) or o.strip() == "":
                     raise ValueError(
                         f'Entity "{safe_name}" has invalid observations. '
@@ -141,8 +168,8 @@ class MemoryClient:
         if not ent_rows:
             return
         self.store.apply_upsert(
-            self.spark.createDataFrame(ent_rows, SCHEMAS["entities"]),
-            self.spark.createDataFrame(obs_rows, SCHEMAS["observations"]),
+            _local_frame(self.spark, ent_rows, SCHEMAS["entities"]),
+            _local_frame(self.spark, obs_rows, SCHEMAS["observations"]),
         )
 
     def create_relations(self, relations: list[dict]) -> None:
@@ -157,13 +184,14 @@ class MemoryClient:
         rows = []
         for r in relations:
             safe_from = sanitize_text(
-                str(r.get("from") or ""), MAX_ENTITY_NAME_LENGTH
+                _scrub(str(r.get("from") or "")), MAX_ENTITY_NAME_LENGTH
             )
             safe_to = sanitize_text(
-                str(r.get("to") or ""), MAX_ENTITY_NAME_LENGTH
+                _scrub(str(r.get("to") or "")), MAX_ENTITY_NAME_LENGTH
             )
             safe_type = sanitize_text(
-                str(r.get("relationType") or ""), MAX_RELATION_TYPE_LENGTH
+                _scrub(str(r.get("relationType") or "")),
+                MAX_RELATION_TYPE_LENGTH,
             )
             if not safe_from or not safe_to or not safe_type:
                 raise ValueError(
@@ -172,7 +200,7 @@ class MemoryClient:
                 )
             rows.append((safe_from, safe_to, safe_type))
         self.store.apply_create_relations(
-            self.spark.createDataFrame(rows, SCHEMAS["relations"])
+            _local_frame(self.spark, rows, SCHEMAS["relations"])
         )
 
     def delete_entity(self, name: str) -> None:
@@ -180,14 +208,16 @@ class MemoryClient:
         # caller's string directly into the WHERE (client.ts:344) —
         # a name that sanitized differently at write time is "not
         # found" there too
+        name = _scrub(name)
         g = self.store.read()
         if g["entities"].where(g["entities"]["name"] == name).count() == 0:
             raise ValueError(f"Entity not found: {name}")
         self.store.apply_delete_entities(
-            self.spark.createDataFrame([(name,)], ["name"])
+            _local_frame(self.spark, [(name,)], _DELETE_NAMES_SCHEMA)
         )
 
     def delete_relation(self, source: str, target: str, type: str) -> None:
+        source, target, type = map(_scrub, (source, target, type))
         g = self.store.read()
         r = g["relations"]
         hit = r.where(
@@ -200,8 +230,8 @@ class MemoryClient:
                 f"Relation not found: {source} -> {target} ({type})"
             )
         self.store.apply_delete_relations(
-            self.spark.createDataFrame(
-                [(source, target, type)], SCHEMAS["relations"]
+            _local_frame(
+                self.spark, [(source, target, type)], SCHEMAS["relations"]
             )
         )
 
@@ -222,17 +252,14 @@ class MemoryClient:
         if not names:
             return {}
         o = g["observations"]
-        rows = (
-            o.where(o["entity_name"].isin(names))
-            .orderBy("created_at", "content")
-            .collect()
-        )
+        rows = o.where(kg_search._in("entity_name", names)).collect()
         out: dict[str, list[str]] = {}
-        for r in rows:
+        for r in _sorted(rows, "created_at", "content"):
             out.setdefault(r.entity_name, []).append(r.content)
         return out
 
     def get_entity(self, name: str) -> dict:
+        name = _scrub(name)
         g = self.store.read()
         rows = g["entities"].where(g["entities"]["name"] == name).collect()
         if not rows:
@@ -248,18 +275,16 @@ class MemoryClient:
         if not names:
             return []
         r = g["relations"]
-        rows = (
-            r.where(r["source"].isin(names) | r["target"].isin(names))
-            .orderBy("source", "target", "relation_type")
-            .collect()
-        )
+        rows = r.where(
+            kg_search._in("source", names) | kg_search._in("target", names)
+        ).collect()
         return [
             {
                 "from": x.source,
                 "to": x.target,
                 "relationType": x.relation_type,
             }
-            for x in rows
+            for x in _sorted(rows, "source", "target", "relation_type")
         ]
 
     def _graph_payload(self, g, rows) -> dict:
@@ -273,7 +298,7 @@ class MemoryClient:
     def search_nodes(self, query: str, limit: int = 10) -> dict:
         g = self.store.read()
         ents = kg_search.search_entities(
-            g["entities"], g["observations"], query, limit
+            g["entities"], g["observations"], _scrub(query), limit
         ).collect()
         return self._graph_payload(g, ents)
 
@@ -298,6 +323,7 @@ class MemoryClient:
         mutates between calls; a serving deployment fits at ingest
         and reuses the index exactly like text_semantic_search's
         fit-once contract."""
+        query_text = _scrub(query_text)
         if not query_text or not query_text.strip():
             raise ValueError("Text query cannot be empty")
         from pyspark.sql import functions as F

@@ -7,6 +7,16 @@
   name=3 > type=2 > observation=1; results are DISTINCT entities
   ordered by (relevance DESC, created_at DESC) with the limit capped
   at 50 (plus a unique-name tiebreak so top-k is deterministic).
+  An entity qualifies by its own name or type, or when one of its
+  observations matches: a correlated EXISTS, planned as an existence
+  join, so each entity row is kept at most once — no join fan-out and
+  no ``distinct`` shuffle. That relies on entity names being unique
+  (``name`` is the reference's primary key, and upsert keeps it so).
+  The match is evaluated as ordered substring lookups of the
+  pattern's literal pieces (``_ilike``), which is exactly what that
+  LIKE matches, with the pieces held as data rather than compiled into
+  the generated code, so a new query runs the same compiled classes as
+  the last one.
 - ``get_recent_entities`` mirrors src/db/client.ts:268-295.
 - ``relations_for_entities`` mirrors src/db/client.ts:407-430
   (relations whose source OR target is in the entity set).
@@ -14,17 +24,18 @@
 
 Scale: the matched/recent entity set is ≤50 rows by construction, so
 every relation lookup is a broadcast semi-join against the (possibly
-huge) relations table — the big side never shuffles. The LIKE scan
-itself is a single pass, predicate evaluated inside codegen; on a
-cluster the observation join shuffles on entity name once and AQE
-handles skew.
+huge) relations table — the big side never shuffles. The match scan
+itself is a single pass; the names of matching observations are
+broadcast into the existence join when they are few, and on a cluster
+the join shuffles on entity name once otherwise, with AQE handling
+skew.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
@@ -42,6 +53,46 @@ def normalize_query(query: str) -> str:
     return "%" + re.sub(r"[\s_\-]+", "%", query.replace("\\", "\\\\")) + "%"
 
 
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal written in ``\\uXXXX``
+    escapes of its UTF-16 code units: plain ASCII, so no quote,
+    backslash or ``${…}`` substitution in ``s`` reaches the parser."""
+    u = s.encode("utf-16-be")
+    units = (f"\\u{u[i]:02x}{u[i + 1]:02x}" for i in range(0, len(u), 2))
+    return "'" + "".join(units) + "'"
+
+
+def _in(col: str, values: list[str]) -> Column:
+    """``col IN (values)``, built as one SQL expression: a Column per
+    value costs one JVM round trip each."""
+    return F.expr(f"{col} IN ({', '.join(map(_sql_str, values))})")
+
+
+def _ilike(col: str, query: str) -> Column:
+    """``col ILIKE normalize_query(query)``, evaluated as lookups of the
+    pattern's literal pieces: each lower-cased piece must occur in
+    ``lower(col)`` at or after the end of the piece before it.
+
+    Not ``Column.ilike``: a LIKE pattern with ``%`` inside has its regex
+    compiled into the generated class, so each new query of two or more
+    words would compile new classes and run them cold. Here the pieces
+    are one array value the generated code reads as data, so every
+    query runs the same classes. The expression is parsed from one SQL
+    string: built from Columns it would cost a JVM round trip per
+    function.
+    """
+    pieces = ", ".join(
+        f"lower({_sql_str(p)})" for p in re.split(r"[\s_\-%]+", query) if p
+    )
+    # the position just past the pieces matched so far; null once one
+    # is missing (a null start makes the next lookup return 0)
+    return F.expr(
+        f"{col} IS NOT NULL AND aggregate(CAST(array({pieces}) AS array<string>),"
+        f" 1, (start, p) -> nullif(position(p, lower({col}), start), 0)"
+        f" + length(p)) IS NOT NULL"
+    )
+
+
 def search_entities(
     entities: DataFrame,
     observations: DataFrame,
@@ -52,19 +103,19 @@ def search_entities(
     relevance_score)."""
     if not query or not query.strip():
         raise ValueError("Text query cannot be empty")
-    pattern = normalize_query(query)
     limit = min(limit, MAX_SEARCH_LIMIT)
 
     e = entities.alias("e")
     o = observations.alias("o")
 
-    name_hit = F.col("e.name").ilike(pattern)
-    type_hit = F.col("e.entity_type").ilike(pattern)
-    obs_hit = F.col("o.content").ilike(pattern)
+    name_hit = _ilike("e.name", query)
+    type_hit = _ilike("e.entity_type", query)
+    obs_hit = o.where(
+        (F.col("o.entity_name") == F.col("e.name").outer())
+        & _ilike("o.content", query)
+    ).exists()
 
-    joined = e.join(o, F.col("e.name") == F.col("o.entity_name"), "left")
-    matched = joined.where(name_hit | type_hit | obs_hit)
-    scored = matched.select(
+    scored = e.where(name_hit | type_hit | obs_hit).select(
         F.col("e.name").alias("name"),
         F.col("e.entity_type").alias("entity_type"),
         F.col("e.created_at").alias("created_at"),
@@ -73,7 +124,7 @@ def search_entities(
         .otherwise(F.lit(1))
         .cast("int")
         .alias("relevance_score"),
-    ).distinct()
+    )
     return scored.orderBy(
         F.col("relevance_score").desc(),
         F.col("created_at").desc(),

@@ -18,16 +18,21 @@ logic.
 - ``delete_relation`` removes exact (source, target, type) matches
   (client.ts:382-405).
 
-Scale: upsert is one shuffle on the entity name (the natural merge
-key — co-partition/bucket the store by name and even that reuses
-layout); deletes are broadcast anti-joins when the delete set is
-small, which is the reference's access pattern.
+Each merge is two halves: a batch half (``_prepare_*``: sanitize,
+filter, deduplicate — it reads only the batch) and a state half
+(``_fold_*``: broadcast joins and unions against the stored tables).
+
+Scale: only the batch half of an upsert shuffles, and only the batch
+(its per-name windows); the state halves are broadcast joins when
+the batch is small, which is the reference's access pattern, so the
+stored tables never shuffle.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
@@ -49,10 +54,112 @@ SCHEMAS = {
 }
 
 
+def _fields(schema: str) -> list[tuple[str, str]]:
+    """``[(column, type), ...]`` of a DDL ``schema``."""
+    return [tuple(f.split()) for f in schema.split(",")]
+
+
 def _conform(df: DataFrame, schema: str) -> DataFrame:
     """``df`` selected and cast to the columns of a DDL ``schema``."""
-    fields = (f.split() for f in schema.split(","))
-    return df.select(*[F.col(n).cast(t).alias(n) for n, t in fields])
+    return df.select(*[F.col(n).cast(t).alias(n) for n, t in _fields(schema)])
+
+
+_ARROW_TYPES = {"string": pa.string(), "bigint": pa.int64()}
+
+
+def _local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A driver-side batch of ``rows`` under a DDL ``schema``, handed to
+    Spark as an Arrow table: it plans as a ``LocalRelation``, so jobs
+    over it run in the JVM. (A Python list plans as an RDD of pickled
+    rows, and every job over it starts Python workers.)"""
+    fields = _fields(schema)
+    columns = list(zip(*rows)) or [()] * len(fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, _ARROW_TYPES[t]) for c, (_, t) in zip(columns, fields)],
+        names=[n for n, _ in fields],
+    )
+    return spark.createDataFrame(table)
+
+
+def _require_names(kind: str, frames: dict, schemas: dict) -> None:
+    """``ValueError`` unless ``frames`` holds exactly the names
+    ``schemas`` declares."""
+    if frames.keys() != schemas.keys():
+        raise ValueError(f"{kind} writes {sorted(schemas)}, got {sorted(frames)}")
+
+
+def _prepare_upsert(
+    batch_entities: DataFrame, batch_observations: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The batch half of an upsert: sanitize, drop invalid rows, keep
+    one row per name and at most MAX_OBSERVATIONS_PER_ENTITY
+    observations per entity. Reads no stored table."""
+    b_ent = batch_entities.select(
+        sanitize_entity_name(F.col("name")).alias("name"),
+        sanitize_entity_type(F.col("entity_type")).alias("entity_type"),
+        F.col("created_at").cast("bigint").alias("created_at"),
+    ).where(F.col("name") != "")
+    # Last-writer-wins inside the batch itself; entity_type tiebreak
+    # keeps the winner deterministic when created_at ties.
+    w = Window.partitionBy("name").orderBy(
+        F.col("created_at").desc(), F.col("entity_type")
+    )
+    b_ent = (
+        b_ent.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    # entity_name != "" mirrors the entity-side filter: a batch row
+    # whose name sanitizes away drops its ENTITY above, so its
+    # observations must drop too — otherwise they'd persist as
+    # undeletable orphans under entity_name "" (cascade deletes key
+    # on real names and would never reach them)
+    b_obs = batch_observations.select(
+        sanitize_entity_name(F.col("entity_name")).alias("entity_name"),
+        sanitize_observation(F.col("content")).alias("content"),
+        F.col("created_at").cast("bigint").alias("created_at"),
+    ).where((F.col("content") != "") & (F.col("entity_name") != ""))
+    # Truncation to the cap is deterministic: first N sorted by
+    # (content, created_at).
+    ow = Window.partitionBy("entity_name").orderBy("content", "created_at")
+    b_obs = (
+        b_obs.withColumn("_rn", F.row_number().over(ow))
+        .where(F.col("_rn") <= MAX_OBSERVATIONS_PER_ENTITY)
+        .drop("_rn")
+    )
+    return b_ent, b_obs
+
+
+def _fold_upsert(
+    entities: DataFrame,
+    observations: DataFrame,
+    b_ent: DataFrame,
+    b_obs: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """The state half of an upsert: merge a *prepared* batch (one row
+    per name) into the stored tables."""
+    batch_names = b_ent.select("name")
+    # Existing rows for upserted names: ≤ batch size (reference caps
+    # 50/call), extracted with a broadcast semi-join so the big
+    # entities table never shuffles — then joined back to the batch
+    # (both sides tiny) to preserve the stored created_at.
+    existing = entities.join(broadcast(batch_names), "name", "leftsemi").select(
+        "name", F.col("created_at").alias("_stored_created_at")
+    )
+    b_ent = b_ent.join(broadcast(existing), "name", "left").select(
+        "name",
+        "entity_type",
+        F.coalesce("_stored_created_at", "created_at").alias("created_at"),
+    )
+    new_entities = entities.join(
+        broadcast(batch_names), "name", "left_anti"
+    ).unionByName(b_ent)
+    kept_obs = observations.join(
+        broadcast(batch_names),
+        observations["entity_name"] == batch_names["name"],
+        "left_anti",
+    )
+    return new_entities, kept_obs.unionByName(b_obs)
 
 
 def upsert_entities(
@@ -77,65 +184,27 @@ def upsert_entities(
       them);
     - entities with > MAX_OBSERVATIONS_PER_ENTITY observations keep
       the first 100 sorted by content (reference rejects the entity).
+
+    Two halves, composed: the batch half ``_prepare_upsert`` (sanitize,
+    filter, last-writer-wins, observation cap) reads only the batch;
+    the state half ``_fold_upsert`` (stored-``created_at`` join,
+    broadcast anti-joins, unions) merges it into the tables. A delta
+    write runs the first half once; merge-on-read runs only the second.
     """
-    b_ent = batch_entities.select(
-        sanitize_entity_name(F.col("name")).alias("name"),
-        sanitize_entity_type(F.col("entity_type")).alias("entity_type"),
-        F.col("created_at").cast("bigint").alias("created_at"),
-    ).where(F.col("name") != "")
-    # Last-writer-wins inside the batch itself; entity_type tiebreak
-    # keeps the winner deterministic when created_at ties.
-    w = Window.partitionBy("name").orderBy(
-        F.col("created_at").desc(), F.col("entity_type")
-    )
-    b_ent = (
-        b_ent.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    batch_names = b_ent.select("name").distinct()
-
-    # Existing rows for upserted names: ≤ batch size (reference caps
-    # 50/call), extracted with a broadcast semi-join so the big
-    # entities table never shuffles — then joined back to the batch
-    # (both sides tiny) to preserve the stored created_at.
-    existing = entities.join(broadcast(batch_names), "name", "leftsemi").select(
-        "name", F.col("created_at").alias("_stored_created_at")
-    )
-    b_ent = b_ent.join(broadcast(existing), "name", "left").select(
-        "name",
-        "entity_type",
-        F.coalesce("_stored_created_at", "created_at").alias("created_at"),
+    return _fold_upsert(
+        entities,
+        observations,
+        *_prepare_upsert(batch_entities, batch_observations),
     )
 
-    kept = entities.join(broadcast(batch_names), "name", "left_anti")
-    new_entities = kept.unionByName(b_ent)
 
-    # entity_name != "" mirrors the entity-side filter: a batch row
-    # whose name sanitizes away drops its ENTITY above, so its
-    # observations must drop too — otherwise they'd persist as
-    # undeletable orphans under entity_name "" (cascade deletes key
-    # on real names and would never reach them)
-    b_obs = batch_observations.select(
-        sanitize_entity_name(F.col("entity_name")).alias("entity_name"),
-        sanitize_observation(F.col("content")).alias("content"),
-        F.col("created_at").cast("bigint").alias("created_at"),
-    ).where((F.col("content") != "") & (F.col("entity_name") != ""))
-    # Truncation to the cap is deterministic: first N sorted by
-    # (content, created_at).
-    ow = Window.partitionBy("entity_name").orderBy("content", "created_at")
-    b_obs = (
-        b_obs.withColumn("_rn", F.row_number().over(ow))
-        .where(F.col("_rn") <= MAX_OBSERVATIONS_PER_ENTITY)
-        .drop("_rn")
-    )
-    kept_obs = observations.join(
-        broadcast(batch_names),
-        observations["entity_name"] == batch_names["name"],
-        "left_anti",
-    )
-    new_observations = kept_obs.unionByName(b_obs)
-    return new_entities, new_observations
+def _prepare_relations(batch_relations: DataFrame) -> DataFrame:
+    """Sanitized relation rows; rows with an empty field dropped."""
+    return batch_relations.select(
+        sanitize_entity_name(F.col("source")).alias("source"),
+        sanitize_entity_name(F.col("target")).alias("target"),
+        sanitize_relation_type(F.col("relation_type")).alias("relation_type"),
+    ).where((F.col("source") != "") & (F.col("target") != "") & (F.col("relation_type") != ""))
 
 
 def create_relations(
@@ -148,12 +217,7 @@ def create_relations(
     adaptation filters instead — ``rejected_relations`` exposes the
     discarded rows so callers can observe data loss).
     """
-    b = batch_relations.select(
-        sanitize_entity_name(F.col("source")).alias("source"),
-        sanitize_entity_name(F.col("target")).alias("target"),
-        sanitize_relation_type(F.col("relation_type")).alias("relation_type"),
-    ).where((F.col("source") != "") & (F.col("target") != "") & (F.col("relation_type") != ""))
-    return relations.unionByName(b)
+    return relations.unionByName(_prepare_relations(batch_relations))
 
 
 def rejected_relations(batch_relations: DataFrame) -> DataFrame:
@@ -172,14 +236,17 @@ def rejected_entities(batch_entities: DataFrame) -> DataFrame:
     return batch_entities.where(sanitize_entity_name(F.col("name")) == "")
 
 
-def delete_entities(
+def _prepare_delete_entities(names: DataFrame) -> DataFrame:
+    return names.select("name").distinct()
+
+
+def _fold_delete_entities(
     entities: DataFrame,
     observations: DataFrame,
     relations: DataFrame,
     names: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Cascade delete by entity name set (client.ts:340-380)."""
-    n = broadcast(names.select("name").distinct())
+    n = broadcast(names)
     e2 = entities.join(n, "name", "left_anti")
     o2 = observations.join(
         n, observations["entity_name"] == n["name"], "left_anti"
@@ -189,13 +256,32 @@ def delete_entities(
     return e2, o2, r2
 
 
+def delete_entities(
+    entities: DataFrame,
+    observations: DataFrame,
+    relations: DataFrame,
+    names: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Cascade delete by entity name set (client.ts:340-380)."""
+    return _fold_delete_entities(
+        entities, observations, relations, _prepare_delete_entities(names)
+    )
+
+
+_RELATION_KEY = ["source", "target", "relation_type"]
+
+
+def _prepare_delete_relations(batch: DataFrame) -> DataFrame:
+    return batch.select(*_RELATION_KEY).distinct()
+
+
+def _fold_delete_relations(relations: DataFrame, batch: DataFrame) -> DataFrame:
+    return relations.join(broadcast(batch), _RELATION_KEY, "left_anti")
+
+
 def delete_relations(relations: DataFrame, batch: DataFrame) -> DataFrame:
     """Remove exact (source, target, relation_type) matches."""
-    return relations.join(
-        broadcast(batch.select("source", "target", "relation_type").distinct()),
-        ["source", "target", "relation_type"],
-        "left_anti",
-    )
+    return _fold_delete_relations(relations, _prepare_delete_relations(batch))
 
 
 # Both relation ops carry the same payload: a batch of relation rows.
@@ -221,16 +307,25 @@ class GraphStore:
     - A snapshot holds ``v{N}/<table>`` for each table of ``SCHEMAS``;
       a bucketed one also registers each table in the catalog.
     - A delta holds ``v{N}/<payload name>`` for each payload its op
-      declares, under the declared schema.
+      declares, under the declared schema. The payload is the op's
+      *prepared* batch: sanitized, filtered and deduplicated once, at
+      write time, by the op's ``prepare``.
+
+    A store holding deltas written before payloads were stored
+    prepared (raw batches) must be checkpointed by that older code
+    first: this code folds a payload as it finds it.
 
     Every frame is selected and cast to its declared schema when it is
     written, and read back under that schema, so no read infers one.
 
     **Delta log** (incremental writes): a delta version holds just
-    the write batch. Reads reconstruct state lazily: load the newest
-    full snapshot at-or-below the requested version, then fold each
-    later delta through its op's pure merge function, the same one
-    used for eager writes. This is the LSM / lakehouse MERGE pattern:
+    the prepared write batch. Reads reconstruct state lazily: load the
+    newest full snapshot at-or-below the requested version, then fold
+    each later delta through its op's ``fold``, the state half of the
+    eager merge function (which is ``fold`` after ``prepare``). A
+    merge-on-read plan therefore carries only broadcast joins and
+    unions: no sanitizing regex, window or shuffle. This is the LSM /
+    lakehouse MERGE pattern:
     a write costs O(batch) — at 100 TB the base is never rewritten per
     batch — while batches stay broadcast-sized, so merge-on-read
     composes broadcast joins and the base table still never shuffles.
@@ -240,25 +335,34 @@ class GraphStore:
     """
 
     TABLES = tuple(SCHEMAS)
-    # op → ({payload name: schema}, fold). A fold takes the three
-    # tables and then the payload frames, both in declared order, and
-    # returns the three tables after the op.
+    # op → ({payload name: schema}, prepare, fold). ``prepare`` takes
+    # the raw payload frames in declared order and returns the frames
+    # a delta stores; ``fold`` takes the three tables and then the
+    # stored payload frames, both in declared order, and returns the
+    # three tables after the op.
     DELTA_OPS = {
         "upsert": (
             {
                 "batch_entities": SCHEMAS["entities"],
                 "batch_observations": SCHEMAS["observations"],
             },
-            lambda e, o, r, ents, obs: (*upsert_entities(e, o, ents, obs), r),
+            _prepare_upsert,
+            lambda e, o, r, ents, obs: (*_fold_upsert(e, o, ents, obs), r),
         ),
-        "delete_entities": ({"names": "name string"}, delete_entities),
+        "delete_entities": (
+            {"names": "name string"},
+            lambda names: (_prepare_delete_entities(names),),
+            _fold_delete_entities,
+        ),
         "create_relations": (
             _RELATION_BATCH,
-            lambda e, o, r, batch: (e, o, create_relations(r, batch)),
+            lambda batch: (_prepare_relations(batch),),
+            lambda e, o, r, batch: (e, o, r.unionByName(batch)),
         ),
         "delete_relations": (
             _RELATION_BATCH,
-            lambda e, o, r, batch: (e, o, delete_relations(r, batch)),
+            lambda batch: (_prepare_delete_relations(batch),),
+            lambda e, o, r, batch: (e, o, _fold_delete_relations(r, batch)),
         ),
     }
     # Natural join keys: bucketing each table on its key makes
@@ -288,9 +392,7 @@ class GraphStore:
         return os.path.join(self.path, f"v{version}", name)
 
     def init_empty(self) -> None:
-        self.write(
-            {t: self.spark.createDataFrame([], s) for t, s in SCHEMAS.items()}
-        )
+        self.write({t: _local_frame(self.spark, [], s) for t, s in SCHEMAS.items()})
 
     def list_versions(self) -> list[int]:
         try:
@@ -362,7 +464,7 @@ class GraphStore:
         op = kind.removeprefix("delta:")
         if op == kind or op not in self.DELTA_OPS:
             raise ValueError(f"v{version} is not a delta (type={kind!r})")
-        payload, fold = self.DELTA_OPS[op]
+        payload, _, fold = self.DELTA_OPS[op]
         frames = [self._load(version, n, s) for n, s in payload.items()]
         return dict(
             zip(self.TABLES, fold(*(tables[t] for t in self.TABLES), *frames))
@@ -394,10 +496,7 @@ class GraphStore:
         declare, or one it declares but ``frames`` lacks, raises
         ``ValueError``. ``n_buckets`` writes bucketed catalog tables
         instead of plain parquet."""
-        if frames.keys() != schemas.keys():
-            raise ValueError(
-                f"{kind} writes {sorted(schemas)}, got {sorted(frames)}"
-            )
+        _require_names(kind, frames, schemas)
         v = self.current_version() + 1
         for name, schema in schemas.items():
             w = _conform(frames[name], schema).write.mode("overwrite")
@@ -446,7 +545,8 @@ class GraphStore:
         )
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
-        """Append a delta version holding only the write batch.
+        """Append a delta version holding only the write batch, run
+        through the op's ``prepare`` first.
 
         Cost is O(batch) regardless of store size — the incremental
         write path. Requires an existing anchor snapshot."""
@@ -456,7 +556,11 @@ class GraphStore:
             raise FileNotFoundError(
                 "delta write needs an anchor snapshot; call init_empty()/write() first"
             )
-        return self._write_version(f"delta:{op}", payload, self.DELTA_OPS[op][0])
+        kind = f"delta:{op}"
+        schemas, prepare, _ = self.DELTA_OPS[op]
+        _require_names(kind, payload, schemas)
+        prepared = prepare(*(payload[n] for n in schemas))
+        return self._write_version(kind, dict(zip(schemas, prepared)), schemas)
 
     def _delta(self, op: str, *frames: DataFrame) -> int:
         """``write_delta`` with the payload frames in declared order."""

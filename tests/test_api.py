@@ -7,14 +7,30 @@ contract for a user switching from the TS MCP server.
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from mcp_memory_libsql_spark.api import MemoryClient
+
+_GROUPS = itertools.count()
 
 
 @pytest.fixture()
 def client(spark, tmp_path):
     return MemoryClient(spark, str(tmp_path / "memstore"))
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"test-api-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_creates_entity_with_observations(client):
@@ -294,3 +310,123 @@ class TestMcpTools:
                 {"name": f"e{i}", "entityType": "t", "observations": []}
                 for i in range(51)
             ]})
+
+    def test_lone_surrogates_match_the_stored_form(self, client):
+        # "\ud800" is valid JSON for a lone surrogate; the store holds it
+        # as U+FFFD, and every tool resolves the same string to that form
+        import json
+
+        from mcp_memory_libsql_spark import mcp_tools as mt
+
+        name, other = "lone\ud800name", "plain"
+        r = mt.dispatch(client, "create_entities", {"entities": [
+            {"name": name, "entityType": "t\udfff",
+             "observations": ["obs \ud800 here"]},
+            {"name": other, "entityType": "t", "observations": ["x"]},
+        ]})
+        assert "isError" not in r
+        r = mt.dispatch(client, "create_relations", {"relations": [
+            {"source": name, "target": other, "type": "rel\ud800"},
+        ]})
+        assert "isError" not in r
+        r = mt.dispatch(client, "search_nodes", {"query": name})
+        assert "isError" not in r, r
+        body = json.loads(r["content"][0]["text"])
+        assert body["entities"] == [{
+            "name": "lone\ufffdname", "entityType": "t\ufffd",
+            "observations": ["obs \ufffd here"],
+        }]
+        assert body["relations"] == [
+            {"from": "lone\ufffdname", "to": other, "relationType": "rel\ufffd"}
+        ]
+        r = mt.dispatch(client, "delete_relation", {
+            "source": name, "target": other, "type": "rel\ud800"})
+        assert "isError" not in r, r
+        r = mt.dispatch(client, "delete_entity", {"name": name})
+        assert "isError" not in r, r
+        body = json.loads(
+            mt.dispatch(client, "read_graph", {})["content"][0]["text"]
+        )
+        assert [e["name"] for e in body["entities"]] == [other]
+        assert body["relations"] == []
+
+
+class TestJvmLocalCalls:
+    """The tool path launches only jobs that move data: batches plan as
+    ``LocalRelation``s and replies need no shuffle."""
+
+    def test_every_batch_is_a_local_relation(self, spark, tmp_path, monkeypatch):
+        from mcp_memory_libsql_spark.kg.store import GraphStore
+
+        plans = []
+
+        def record(frames):
+            plans.extend(
+                f._jdf.queryExecution().optimizedPlan().toString()
+                for f in frames.values()
+            )
+
+        orig_write = GraphStore.write
+
+        def write(self, tables, *args, **kwargs):
+            record(tables)
+            return orig_write(self, tables, *args, **kwargs)
+
+        monkeypatch.setattr(GraphStore, "write", write)
+        client = MemoryClient(spark, str(tmp_path / "local"))  # init_empty
+        assert len(plans) == 3
+        monkeypatch.setattr(GraphStore, "write", orig_write)
+
+        # write_delta receives the raw batch, before its op's prepare
+        orig_delta = GraphStore.write_delta
+
+        def write_delta(self, op, payload):
+            record(payload)
+            return orig_delta(self, op, payload)
+
+        monkeypatch.setattr(GraphStore, "write_delta", write_delta)
+        client.create_entities(
+            [{"name": "a", "entityType": "t", "observations": ["x", "y"]},
+             {"name": "b", "entityType": "t", "observations": ["z"]}]
+        )
+        client.create_relations([{"from": "a", "to": "b", "relationType": "r"}])
+        client.delete_relation("a", "b", "r")
+        client.delete_entity("a")
+        assert len(plans) == 3 + 5
+        for plan in plans:
+            assert plan.startswith("LocalRelation"), plan
+
+    def test_create_relations_is_one_job(self, spark, tmp_path):
+        client = MemoryClient(spark, str(tmp_path / "one-job"))
+        n = _jobs(spark, lambda: client.create_relations(
+            [{"from": "a", "to": "b", "relationType": "r"},
+             {"from": "b", "to": "c", "relationType": "r"}]
+        ))
+        assert n == 1
+
+    def test_replies_at_chain_zero_need_few_jobs(self, spark, tmp_path):
+        from mcp_memory_libsql_spark import mcp_tools as mt
+
+        client = MemoryClient(spark, str(tmp_path / "replies"))
+        client.create_entities([
+            {"name": f"e{i}", "entityType": "t",
+             "observations": [f"note {i} about spark", "other"]}
+            for i in range(6)
+        ])
+        client.create_relations(
+            [{"from": f"e{i}", "to": f"e{i + 1}", "relationType": "next"}
+             for i in range(5)]
+        )
+        client.store.checkpoint()
+        assert client.store.delta_chain_length() == 0
+        replies = []
+
+        def call(name, args):
+            replies.append(mt.dispatch(client, name, args))
+
+        # the top-k, the observations of its rows, their relations
+        assert _jobs(spark, lambda: call("search_nodes", {"query": "spark"})) <= 4
+        assert _jobs(spark, lambda: call("read_graph", {})) <= 3
+        for r in replies:
+            assert "isError" not in r, r
+        assert '"e5"' in replies[0]["content"][0]["text"]

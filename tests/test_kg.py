@@ -68,6 +68,57 @@ def test_fuzzy_normalization(g):
     assert any(r.name == "MIDDLE EAST" for r in out)
 
 
+def test_search_match_equals_ilike_of_normalized_query(spark):
+    texts = [
+        None, "", "Middle East", "the middle-east desk", "east of middle",
+        "aba", "abba", "a\\b", "a\\\\b", "50% off", "5 off", "x\nY\nz",
+        "ΟΔΟΣ οδος", "İstanbul", "ab_cd", "abXcd",
+    ]
+    queries = [
+        "middle east", "middle_east", "ab ba", "a\\b", "50%off", "%",
+        "_", "x z", "ΟΔΟΣ", "i̇stanbul", "ab-cd", "b", "zz",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    for q in queries:
+        got = df.select(
+            F.coalesce(kg_search._ilike("t", q), F.lit(False)),
+            F.coalesce(
+                F.col("t").ilike(kg_search.normalize_query(q)), F.lit(False)
+            ),
+        ).collect()
+        assert [a for a, _ in got] == [b for _, b in got], q
+
+
+def test_sql_str_round_trips(spark):
+    # quotes, backslashes and ${...} reach Spark as data, not SQL
+    values = [
+        "", "plain", "it's", "a\\b", "${spark.app.name}", "x\ny\x00",
+        "é中", "😀 emoji", "--", "')",
+    ]
+    got = spark.range(1).select(
+        *[F.expr(kg_search._sql_str(v)) for v in values]
+    ).collect()[0]
+    assert list(got) == values
+
+
+def test_search_new_query_compiles_no_code(spark, g):
+    # the query's words are data, not generated source: a query of a
+    # shape already run reuses the compiled classes
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    count = lambda: compiled.METRIC_COMPILATION_TIME().getCount()  # noqa: E731
+
+    def search(q):
+        return kg_search.search_entities(
+            g["entities"], g["observations"], q, limit=10
+        ).collect()
+
+    search("middle east")
+    before = count()
+    assert search("economy brushed_steel") is not None
+    assert search("customer") is not None
+    assert count() == before
+
+
 def test_upsert_replaces_observations(spark, g):
     batch_e = _df(
         spark,

@@ -323,6 +323,54 @@ def test_graphstore_read_launches_no_spark_job(spark, tmp_path):
     }
 
 
+def test_graphstore_read_plans_carry_no_batch_work(spark, tmp_path):
+    import re
+
+    store = _mk_delta_store(spark, tmp_path)
+    # deltas hold prepared payloads: merge-on-read only joins and
+    # unions them, with nothing left to sanitize, window or shuffle
+    for table, df in store.read().items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, (table, plan)
+        assert "regexp_replace" not in plan, (table, plan)
+        assert not re.search(r"\bExchange (hash|range)partitioning", plan), (
+            table, plan
+        )
+
+
+def test_graphstore_raw_upsert_delta_matches_eager(spark, tmp_path):
+    from mcp_memory_libsql_spark.kg.store import upsert_entities
+
+    store = _mk_store(spark, tmp_path)
+    ents = spark.createDataFrame(
+        [
+            ("  A\x00 ", "robot", 40),  # control char + edge whitespace
+            ("C", "thing", 30),
+            ("C", "widget", 31),  # duplicate name, second type wins
+            ("\x01\x02", "void", 50),  # sanitizes to "": dropped
+        ],
+        "name string, entity_type string, created_at bigint",
+    )
+    obs = spark.createDataFrame(
+        [("C", f"fact {i:03d}", 30) for i in range(101)]
+        + [(" A", "likes\x07 coffee\n\n\n\nand tea ", 40), ("\x01\x02", "gone", 50)],
+        "entity_name string, content string, created_at bigint",
+    )
+    base = store.read()
+    want_e, want_o = upsert_entities(
+        base["entities"], base["observations"], ents, obs
+    )
+    store.write_delta("upsert", {"batch_entities": ents, "batch_observations": obs})
+    got = store.read()
+    got_e = {tuple(r) for r in got["entities"].collect()}
+    got_o = {tuple(r) for r in got["observations"].collect()}
+    assert got_e == {tuple(r) for r in want_e.collect()}
+    assert got_o == {tuple(r) for r in want_o.collect()}
+    assert got_e == {("A", "robot", 10), ("B", "place", 20), ("C", "widget", 31)}
+    assert sum(1 for r in got_o if r[0] == "C") == 100
+    assert ("A", "likes coffee\n\nand tea", 40) in got_o
+
+
 def test_graphstore_chain_walks_each_version_once(spark, tmp_path, monkeypatch):
     store = _mk_delta_store(spark, tmp_path)
     calls = {"version_type": 0, "list_versions": 0}
