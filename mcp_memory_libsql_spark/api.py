@@ -24,9 +24,12 @@ Per-call semantics mirrored:
 - ``search_nodes(query)`` / ``read_graph()``: {entities, relations}
   payloads (client.ts:433-474); empty query throws.
 
-created_at is a monotonic batch stamp (one tick per write) — the
-batch-engine stand-in for the reference's datetime('now') that keeps
-recency ordering exact and deterministic.
+created_at is a monotonic batch stamp (the store's next version) —
+the batch-engine stand-in for the reference's datetime('now') that
+keeps recency ordering exact and deterministic. However long the
+session, the store bounds its delta chain at 4
+(``GraphStore.MAX_DELTA_CHAIN``): the write that takes it to 5 also
+checkpoints, at O(store), and stamps skip the checkpoint's version.
 
 Per-call cost is kept to jobs that move data:
 - every batch a call sends to Spark is JVM-local: built as an Arrow

@@ -146,11 +146,16 @@ def compact_parquet(
     files destroy scan throughput: per-file open cost, starved
     vectorized reads, bloated listings). Row-count-based sizing keeps
     it deterministic; at 100 TB you'd size by bytes via
-    spark.sql.files.maxRecordsPerFile instead of a coalesce."""
+    spark.sql.files.maxRecordsPerFile instead of a coalesce (or a
+    repartition when the read has fewer partitions than files)."""
     df = spark.read.parquet(src)
     n = df.count()
     files = max(1, -(-n // target_rows_per_file))
-    df.coalesce(files).write.mode("overwrite").parquet(dst)
+    if df.rdd.getNumPartitions() >= files:
+        df = df.coalesce(files)
+    else:
+        df = df.repartition(files)
+    df.write.mode("overwrite").parquet(dst)
     return files
 
 

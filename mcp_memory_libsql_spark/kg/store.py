@@ -329,12 +329,19 @@ class GraphStore:
     a write costs O(batch) — at 100 TB the base is never rewritten per
     batch — while batches stay broadcast-sized, so merge-on-read
     composes broadcast joins and the base table still never shuffles.
-    ``checkpoint()`` materializes the merged state as a new full
-    snapshot, bounding read-path plan depth (call it every O(10)
-    deltas, like compaction in any LSM).
+
+    **Chain bound.** ``write_delta`` checkpoints (writes the merged state
+    as a full snapshot) once its delta takes the chain past
+    ``MAX_DELTA_CHAIN``, so no caller has to. Each upsert delta roughly
+    doubles the entities plan; 4 keeps reads within about 3× of chain 0
+    and checkpoints out of ``perfbench`` sessions (≤ 3 deltas each). A
+    checkpoint adds a full snapshot that nothing vacuums, and a plain
+    one even when the anchor was bucketed.
     """
 
     TABLES = tuple(SCHEMAS)
+    # Longest delta chain a committed write leaves behind.
+    MAX_DELTA_CHAIN = 4
     # op → ({payload name: schema}, prepare, fold). ``prepare`` takes
     # the raw payload frames in declared order and returns the frames
     # a delta stores; ``fold`` takes the three tables and then the
@@ -546,10 +553,11 @@ class GraphStore:
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
         """Append a delta version holding only the write batch, run
-        through the op's ``prepare`` first.
+        through the op's ``prepare`` first; returns its version.
 
-        Cost is O(batch) regardless of store size — the incremental
-        write path. Requires an existing anchor snapshot."""
+        Cost is O(batch) regardless of store size, except for the write
+        that takes the chain past ``MAX_DELTA_CHAIN``: it checkpoints, at
+        O(store). Requires an existing anchor snapshot."""
         if op not in self.DELTA_OPS:
             raise ValueError(f"unknown delta op {op!r}")
         if self.current_version() < 0:
@@ -560,7 +568,10 @@ class GraphStore:
         schemas, prepare, _ = self.DELTA_OPS[op]
         _require_names(kind, payload, schemas)
         prepared = prepare(*(payload[n] for n in schemas))
-        return self._write_version(kind, dict(zip(schemas, prepared)), schemas)
+        v = self._write_version(kind, dict(zip(schemas, prepared)), schemas)
+        if self.delta_chain_length() > self.MAX_DELTA_CHAIN:
+            self.checkpoint()
+        return v
 
     def _delta(self, op: str, *frames: DataFrame) -> int:
         """``write_delta`` with the payload frames in declared order."""
@@ -583,7 +594,7 @@ class GraphStore:
 
     def delta_chain_length(self, version: int | None = None) -> int:
         """Number of deltas folded into a read at ``version`` — the
-        read-path plan-depth metric that tells you when to checkpoint."""
+        read-path plan-depth metric ``write_delta`` bounds."""
         return len(self._chain(version)[2])
 
     def checkpoint(self, bucketed: bool = False, n_buckets: int = 32) -> int:
@@ -625,11 +636,10 @@ class GraphStore:
     def compact(self, target_partitions: int = 4) -> int:
         """Rewrite the current snapshot with each table coalesced to
         ``target_partitions`` files — the small-file compaction an
-        upsert-heavy store needs (every foreachBatch micro-batch
-        writes a fresh snapshot whose file count tracks the shuffle
-        width, not the data size). Produces a NEW snapshot version
-        (readers of old versions are untouched); on a cluster this is
-        the OPTIMIZE job an ACID table format schedules."""
+        upsert-heavy store needs (a checkpoint's file count tracks the
+        folded plan's partitions, not the data size). Produces a NEW
+        snapshot version (readers of old versions are untouched); on a
+        cluster this is the OPTIMIZE job an ACID table format schedules."""
         tables = {
             tbl: df.coalesce(target_partitions)
             for tbl, df in self.read().items()

@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..kg.store import SCHEMAS
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -105,11 +107,33 @@ def dedup_stream(
     )
 
 
+def _store_stream(
+    spark: SparkSession, dir_path: str, schema: str, apply, checkpoint_location: str
+):
+    """Stream JSON files (DDL ``schema``, one per micro-batch) into a
+    ``GraphStore`` through ``apply(batch_df)``. The stream checkpoint
+    is not optional: without it a restart re-reads EVERY source file
+    and re-applies every delta, doubling the store."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.take(1):
+            apply(batch_df)
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .json(dir_path)
+        .writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_location)
+        .outputMode("update")
+        .start()
+    )
+
+
 def entity_upsert_stream(
     spark: SparkSession,
     dir_path: str,
     store,
-    checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
 ):
     """Micro-batch entity upserts: each arriving JSON file carries
@@ -120,25 +144,11 @@ def entity_upsert_stream(
 
     Each micro-batch is an O(batch) **delta write** (the base tables
     are never rewritten per batch — at 100 TB a full-snapshot rewrite
-    per micro-batch would be the whole job's cost); after
-    ``checkpoint_every`` deltas the store checkpoints, bounding the
-    merge-on-read chain the way an LSM compacts.
+    per micro-batch would be the whole job's cost); the store bounds
+    its own merge-on-read chain, the way an LSM compacts.
     """
-    batch_schema = StructType(
-        [
-            StructField("name", StringType()),
-            StructField("entity_type", StringType()),
-            StructField("created_at", LongType()),
-            StructField("content", StringType()),
-        ]
-    )
-    stream = spark.readStream.schema(batch_schema).option(
-        "maxFilesPerTrigger", 1
-    ).json(dir_path)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
+    def apply(batch_df: DataFrame) -> None:
         # observation-only rows carry a null entity_type; they must
         # NOT enter the entity batch (NULL sorts first in the LWW
         # tiebreak and would null the stored type)
@@ -151,16 +161,14 @@ def entity_upsert_stream(
             F.col("name").alias("entity_name"), "content", "created_at"
         )
         store.apply_upsert(batch_e, batch_o)
-        if checkpoint_every and store.delta_chain_length() >= checkpoint_every:
-            store.checkpoint()
 
-    # Without a Structured Streaming checkpoint, a restart re-reads
-    # EVERY source file and re-applies every delta — the store would
-    # double on each recovery. Default next to the store itself.
-    w = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir or store.path + "/_stream_ckpt_entities"
+    return _store_stream(
+        spark,
+        dir_path,
+        "name string, entity_type string, created_at bigint, content string",
+        apply,
+        checkpoint_dir or store.path + "/_stream_ckpt_entities",
     )
-    return w.outputMode("update").start()
 
 
 def enrich_events(events: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
@@ -313,7 +321,6 @@ def relation_upsert_stream(
     spark: SparkSession,
     dir_path: str,
     store,
-    checkpoint_every: int = 8,
     checkpoint_dir: str | None = None,
 ):
     """Micro-batch relation creation — the streaming twin of the
@@ -321,34 +328,14 @@ def relation_upsert_stream(
     src/db/client.ts:298-338), completing the live write surface next
     to ``entity_upsert_stream``: arriving JSON files carry (source,
     target, relation_type) rows applied as O(batch) GraphStore deltas
-    through the SAME merge as the batch path, with periodic
-    checkpoints bounding the merge-on-read chain."""
-    rel_schema = StructType(
-        [
-            StructField("source", StringType()),
-            StructField("target", StringType()),
-            StructField("relation_type", StringType()),
-        ]
+    through the SAME merge as the batch path."""
+    return _store_stream(
+        spark,
+        dir_path,
+        SCHEMAS["relations"],
+        store.apply_create_relations,
+        checkpoint_dir or store.path + "/_stream_ckpt_relations",
     )
-    stream = spark.readStream.schema(rel_schema).option(
-        "maxFilesPerTrigger", 1
-    ).json(dir_path)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        store.apply_create_relations(
-            batch_df.select("source", "target", "relation_type")
-        )
-        if checkpoint_every and store.delta_chain_length() >= checkpoint_every:
-            store.checkpoint()
-
-    # see entity_upsert_stream: a restart without a checkpoint would
-    # replay every file as a fresh append, doubling the relations
-    w = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir or store.path + "/_stream_ckpt_relations"
-    )
-    return w.outputMode("update").start()
 
 
 def topk_users_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):

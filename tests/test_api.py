@@ -218,6 +218,62 @@ def test_search_similar_restores_historical_vector_api(client):
         client.search_similar("   ")
 
 
+def test_long_session_keeps_the_delta_chain_bounded(client):
+    # 32 create_entities calls on one client: each write's delta would
+    # roughly double the entities plan if the chain were never folded
+    import json
+
+    from mcp_memory_libsql_spark import mcp_tools as mt
+
+    store = client.store
+    latest, plans = {}, []
+    for call in range(1, 33):
+        batch = [
+            {"name": f"s{call}n{i}", "entityType": "fresh",
+             "observations": [f"first seen in call {call}"]}
+            for i in range(4)
+        ] + [
+            {"name": f"s{k}n{i}", "entityType": f"type{call}",
+             "observations": [f"updated in call {call}", f"note {i}"]}
+            for k in (call - 1, call // 2) if k > 0
+            for i in range(2)
+        ]
+        reply = mt.dispatch(client, "create_entities", {"entities": batch})
+        assert "isError" not in reply, reply
+        chain = store.delta_chain_length()
+        assert chain <= 4, (call, chain)
+        ents = store.read()["entities"]
+        plans.append(
+            len(ents._jdf.queryExecution().optimizedPlan().toString().splitlines())
+        )
+        # no read ever folds a deeper plan than the one at chain 4
+        assert plans[-1] <= plans[min(call, 4) - 1], (call, plans)
+        latest.update((e["name"], e) for e in batch)
+
+    found = json.loads(
+        mt.dispatch(client, "search_nodes", {"query": "s32n3"})["content"][0]["text"]
+    )
+    assert [e["name"] for e in found["entities"]] == ["s32n3"]
+    g = store.read()
+    ents = {r.name: (r.entity_type, r.created_at) for r in g["entities"].collect()}
+    obs = {}
+    for r in g["observations"].collect():
+        obs.setdefault(r.entity_name, []).append(r.content)
+    assert {n: t for n, (t, _) in ents.items()} == {
+        n: e["entityType"] for n, e in latest.items()
+    }
+    assert {n: sorted(o) for n, o in obs.items()} == {
+        n: sorted(e["observations"]) for n, e in latest.items()
+    }
+    # s{k}n2 and s{k}n3 are never upserted, so they hold call k's
+    # stamp; the upserted s{k}n0 and s{k}n1 must hold it too, and the
+    # stamps rise from call to call across the checkpoints
+    stamps = [ents[f"s{k}n3"][1] for k in range(1, 33)]
+    for k, stamp in enumerate(stamps, 1):
+        assert {ents[f"s{k}n{i}"][1] for i in range(4)} == {stamp}, k
+    assert stamps == sorted(set(stamps))
+
+
 class TestMcpTools:
     """The MCP dispatch layer mirrors src/index.ts tool-for-tool:
     names/schemas, success strings, JSON read payloads, internal_error

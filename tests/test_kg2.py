@@ -388,6 +388,77 @@ def test_graphstore_chain_walks_each_version_once(spark, tmp_path, monkeypatch):
     assert calls == {"version_type": chain + 1, "list_versions": 1}
 
 
+def test_graphstore_write_delta_bounds_the_chain(spark, tmp_path):
+    from mcp_memory_libsql_spark.kg.store import (
+        SCHEMAS,
+        create_relations,
+        delete_entities,
+        delete_relations,
+        upsert_entities,
+    )
+
+    def rows(tables):
+        return {t: sorted(map(tuple, df.collect())) for t, df in tables.items()}
+
+    def frames(state):
+        return {t: spark.createDataFrame(r, SCHEMAS[t]) for t, r in state.items()}
+
+    def eager(state, op, p):
+        t = frames(state)
+        e, o, r = t["entities"], t["observations"], t["relations"]
+        if op == "upsert":
+            e, o = upsert_entities(e, o, p["batch_entities"], p["batch_observations"])
+        elif op == "create_relations":
+            r = create_relations(r, p["batch_relations"])
+        elif op == "delete_relations":
+            r = delete_relations(r, p["batch_relations"])
+        else:
+            e, o, r = delete_entities(e, o, r, p["names"])
+        return rows({"entities": e, "observations": o, "relations": r})
+
+    def upsert(*ents):
+        return {
+            "batch_entities": spark.createDataFrame(
+                [(n, t, ts) for n, t, ts, _ in ents], SCHEMAS["entities"]
+            ),
+            "batch_observations": spark.createDataFrame(
+                [(n, c, ts) for n, _, ts, c in ents], SCHEMAS["observations"]
+            ),
+        }
+
+    def rels(*rs):
+        return {"batch_relations": spark.createDataFrame(rs, SCHEMAS["relations"])}
+
+    writes = [
+        ("upsert", upsert(("A", "human", 99, "likes coffee"), ("C", "thing", 30, "is new"))),
+        ("create_relations", rels(("C", "A", "knows"), ("B", "C", "sees"))),
+        ("delete_relations", rels(("A", "B", "visited"))),
+        ("upsert", upsert(("B", "city", 50, "is warm"), ("D", "tool", 50, "cuts"))),
+        ("delete_entities", {"names": spark.createDataFrame([("C",)], "name string")}),
+        ("upsert", upsert(("C", "thing", 60, "is back"), ("A", "robot", 70, "beeps"))),
+    ]
+    store = _mk_store(spark, tmp_path)  # v0 empty snapshot, v1 data
+    want = {v: rows(store.read(version=v)) for v in (0, 1)}
+    for i, (op, payload) in enumerate(writes, 1):
+        v = store.write_delta(op, payload)
+        assert store.delta_chain_length() <= 4, (i, store.delta_chain_length())
+        want[v] = eager(want[max(want)], op, payload)
+        if i == 5:
+            # the write that takes the chain to 5 checkpoints after
+            # committing its delta, which stays readable
+            assert store.current_version() == v + 1
+            assert store.version_type(v + 1) == "snapshot"
+            want[v + 1] = want[v]
+    assert sorted(want) == store.list_versions()
+    assert [store.delta_chain_length(v) for v in sorted(want)] == [
+        0, 0, 1, 2, 3, 4, 5, 0, 1
+    ]
+    for v, w in want.items():
+        assert rows(store.read(version=v)) == w, v
+    # upserted A kept its first created_at through the checkpoint
+    assert ("A", "robot", 10) in want[max(want)]["entities"]
+
+
 def test_graphstore_write_delta_rejects_undeclared_payload(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
     v = store.current_version()
