@@ -123,7 +123,10 @@ class MemoryClient:
 
     def create_entities(self, entities: list[dict]) -> None:
         ts = self._stamp()
-        ent_rows, obs_rows = [], []
+        # keyed by sanitized name: the reference applies a call's
+        # entities one after another, so a repeated name's last
+        # occurrence replaces the earlier ones
+        rows: dict[str, tuple[str, list[str]]] = {}
         for e in entities:
             name = _scrub(e.get("name"))
             if not isinstance(name, str) or name.strip() == "":
@@ -166,10 +169,11 @@ class MemoryClient:
                         "empty after sanitization"
                     )
                 safe_obs.append(so)
-            ent_rows.append((safe_name, safe_type, ts))
-            obs_rows += [(safe_name, o, ts) for o in safe_obs]
-        if not ent_rows:
+            rows[safe_name] = (safe_type, safe_obs)
+        if not rows:
             return
+        ent_rows = [(n, t, ts) for n, (t, _) in rows.items()]
+        obs_rows = [(n, o, ts) for n, (_, obs) in rows.items() for o in obs]
         self.store.apply_upsert(
             _local_frame(self.spark, ent_rows, SCHEMAS["entities"]),
             _local_frame(self.spark, obs_rows, SCHEMAS["observations"]),

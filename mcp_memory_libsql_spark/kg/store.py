@@ -88,6 +88,11 @@ def _require_names(kind: str, frames: dict, schemas: dict) -> None:
         raise ValueError(f"{kind} writes {sorted(schemas)}, got {sorted(frames)}")
 
 
+def _parquet_files(path: str) -> int:
+    """Number of parquet data files in a table directory."""
+    return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+
 def _prepare_upsert(
     batch_entities: DataFrame, batch_observations: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
@@ -601,8 +606,19 @@ class GraphStore:
         """Materialize merge-on-read state into a new full snapshot,
         resetting delta-chain depth to zero (LSM compaction).
         ``bucketed=True`` re-establishes the join-key bucket layout
-        at the same time — compaction and clustering in one pass."""
-        return self.write(self.read(), bucketed=bucketed, n_buckets=n_buckets)
+        at the same time — compaction and clustering in one pass.
+
+        Each table is written in no more files than the anchor snapshot
+        holds for it (at least 1): the folded plan's partition count
+        grows with every union in the chain, so without the
+        ``coalesce`` (which never shuffles) each checkpoint would hold
+        more files than the last."""
+        anchor = self._chain(None)[0]
+        tables = {
+            tbl: df.coalesce(max(1, _parquet_files(self._dir(anchor, tbl))))
+            for tbl, df in self.read().items()
+        }
+        return self.write(tables, bucketed=bucketed, n_buckets=n_buckets)
 
 
     def vacuum(self, keep_last: int = 2) -> list[int]:

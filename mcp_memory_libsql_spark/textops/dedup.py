@@ -710,21 +710,14 @@ def substring_fingerprints(
     (167.3s vs 166.3s). Keys are join-internal — query outputs (and
     so the oracle gate) agree across key modes absent 60-bit
     collisions, the module's standing budget.
-    SPARK_GRAFT_SUBSTR_KEY=md5hex opts back; SPARK_GRAFT_FAST_HASH=1
-    swaps the window hash for xxhash64 instead (the 100 TB CPU lever
-    — the r07 rehearsal's first substring fasthash column measured
-    NO speedup because this function ignored the flag).
+    SPARK_GRAFT_FAST_HASH=1 swaps the window hash for xxhash64
+    instead (the 100 TB CPU lever — the r07 rehearsal's first
+    substring fasthash column measured NO speedup because this
+    function ignored the flag).
     """
-    from .tokenize import fast_hash_enabled, substr_bigint_keys
+    from .tokenize import fast_hash_enabled, md5_hash60
 
-    if fast_hash_enabled():
-        win_hash = F.xxhash64
-    elif substr_bigint_keys():
-        from .tokenize import md5_hash60
-
-        win_hash = md5_hash60
-    else:
-        win_hash = F.md5
+    win_hash = F.xxhash64 if fast_hash_enabled() else md5_hash60
     starts = F.sequence(F.lit(0), F.length("text") - width, F.lit(stride))
     hashes = F.array_distinct(
         F.transform(

@@ -197,25 +197,3 @@ def pair_combos(ids, a: str = "a", b: str = "b"):
             ),
         )
     )
-
-
-def substr_bigint_keys() -> bool:
-    """Substring-dedup window keys as conv-folded 60-bit BIGINTs
-    (md5_hash60) instead of 32-char md5 hex strings — the DEFAULT
-    since the r08 300× A/B (OPTIMIZATION_r09.md, fresh session
-    per variant, shuffle bytes from the REST API): at the spill
-    regime the 8-byte key cut dedup_substring's wall 269.3s → 173.2s
-    (1.56× averaged over both run orders, the artifact's decision
-    basis; forward order alone was 286.7s → 166.3s, reverse-order
-    lz4 251.9s → 180.0s) and shuffle 2.05 GB → 0.86 GB on lz4.
-    The r07 30× revert measured the opposite only
-    because shuffle still fit page cache (key bytes were free there;
-    the fold cost ~15% — the in-cache price of the spill-regime win).
-    zstd was A/B'd in the same harness and stays off: it rescues the
-    WIDE key (198.6s vs 286.7s) but adds nothing once keys are
-    narrow (167.3s vs 166.3s). Window keys never reach a query's
-    output — the oracle gate checks the RESULTS, which agree across
-    key modes absent 60-bit collisions (the module's standing
-    collision budget). SPARK_GRAFT_SUBSTR_KEY=md5hex opts back into
-    hex-string keys."""
-    return os.environ.get("SPARK_GRAFT_SUBSTR_KEY", "bigint60") == "bigint60"

@@ -272,6 +272,19 @@ def test_long_session_keeps_the_delta_chain_bounded(client):
     for k, stamp in enumerate(stamps, 1):
         assert {ents[f"s{k}n{i}"][1] for i in range(4)} == {stamp}, k
     assert stamps == sorted(set(stamps))
+    # checkpoints write no more files per table than the first snapshot
+    import os
+
+    def files(v):
+        return {t: sum(f.endswith(".parquet") for f in os.listdir(store._dir(v, t)))
+                for t in store.TABLES}
+
+    snapshots = [v for v in store.list_versions()
+                 if store.version_type(v).startswith("snapshot")]
+    assert len(snapshots) > 1
+    assert all(
+        files(v)[t] <= files(0)[t] for v in snapshots for t in store.TABLES
+    ), {v: files(v) for v in snapshots}
 
 
 class TestMcpTools:
@@ -337,6 +350,36 @@ class TestMcpTools:
             mt.dispatch(client, "read_graph", {})["content"][0]["text"]
         )
         assert {e["name"] for e in body["entities"]} == {"beta"}
+
+    def test_repeated_name_in_one_call_keeps_the_last_occurrence(self, client):
+        # the reference applies a call's entities one after another, so
+        # the last occurrence of a name replaces type and observations
+        import json
+
+        from mcp_memory_libsql_spark import mcp_tools as mt
+
+        def create(*entities):
+            r = mt.dispatch(client, "create_entities", {"entities": [
+                {"name": n, "entityType": t, "observations": obs}
+                for n, t, obs in entities
+            ]})
+            assert "isError" not in r, r
+
+        create(("A", "alpha", ["first"]), ("A", "zeta", ["second"]))
+        create(("B", "orig", ["b0"]))
+        create(("B", "mid", ["m1", "m2"]), ("B", "last", ["l1"]))
+        create(("C", "t1", [f"one {i:02}" for i in range(60)]),
+               ("C", "t2", [f"two {i:02}" for i in range(60)]))
+        body = json.loads(
+            mt.dispatch(client, "read_graph", {})["content"][0]["text"]
+        )
+        got = {e["name"]: (e["entityType"], sorted(e["observations"]))
+               for e in body["entities"]}
+        assert got == {
+            "A": ("zeta", ["second"]),
+            "B": ("last", ["l1"]),
+            "C": ("t2", [f"two {i:02}" for i in range(60)]),
+        }
 
     def test_handler_error_becomes_internal_error_payload(self, client):
         import json

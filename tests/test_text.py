@@ -508,11 +508,6 @@ def test_fast_hash_path_preserves_dedup_semantics(spark, monkeypatch):
     assert all(isinstance(h, int) for h in fp_fast)  # xxhash64 longs
     # default key mode is bigint60 (r08 A/B flip): md5-derived 60-bit longs
     assert all(isinstance(h, int) for h in fp_base)
-    # the md5hex opt-out still yields the oracle-gated hex strings
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_KEY", "md5hex")
-    fp_hex = {r.h for r in dd.substring_fingerprints(docs).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_SUBSTR_KEY")
-    assert all(isinstance(h, str) for h in fp_hex)
     sub_base = {
         (r.doc_a, r.doc_b)
         for r in dd.substring_dup_pairs(docs, min_shared=1).collect()
@@ -892,20 +887,11 @@ def test_star_keep_lists_match_clique_fed_path(spark):
     assert star_win == clique_keep(dd.winnowing_pairs(docs))
 
 
-def test_substring_bigint_key_flag_identical_pairs(spark, sf_dir, monkeypatch):
-    """Window-key mode changes key WIDTH (the 300x spill-regime
-    shuffle lever), never the answer — and each mode must actually
-    reach the plan (the r07 fasthash lesson: a vacuous flag measured
-    as a no-op for a round). Since the r08 300x A/B the DEFAULT is
-    bigint60; SPARK_GRAFT_SUBSTR_KEY=md5hex is the opt-out."""
+def test_substring_bigint_key_flag_identical_pairs(spark, sf_dir):
+    """Window keys are 60-bit BIGINTs (the r08 300x spill-regime A/B),
+    and the fold must actually reach the plan (the r07 fasthash
+    lesson: a vacuous flag measured as a no-op for a round)."""
     docs = load_tables(spark, sf_dir)["documents"]
     default_plan = dedup.substring_fingerprints(docs)._jdf.queryExecution(
     ).optimizedPlan().toString()
     assert "conv(" in default_plan  # bigint60 fold is the default plan
-    base = sorted(map(str, dedup.substring_dup_pairs(docs).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_SUBSTR_KEY", "md5hex")
-    hex_plan = dedup.substring_fingerprints(docs)._jdf.queryExecution(
-    ).optimizedPlan().toString()
-    assert "conv(" not in hex_plan  # opt-out really strips the fold
-    flagged = sorted(map(str, dedup.substring_dup_pairs(docs).collect()))
-    assert flagged == base
