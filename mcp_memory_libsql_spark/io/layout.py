@@ -25,23 +25,24 @@ def write_bucketed(
     df: DataFrame,
     table: str,
     bucket_cols: list[str],
+    path: str,
     n_buckets: int = 32,
 ) -> None:
-    """Persist ``df`` as a bucketed+sorted managed table. Bucket count
-    is a layout contract: both sides of a co-located join must use
-    the SAME n_buckets (at 100 TB pick n_buckets ≈ cluster cores so
-    one bucket ≈ one task)."""
+    """Persist ``df`` as a bucketed+sorted EXTERNAL table ``table``
+    whose data files live at ``path``: the catalog holds only the
+    bucketing metadata, so the write works under a session whose
+    warehouse dir is unwritable, and deleting ``path`` reclaims the
+    data. Bucket count is a layout contract: both sides of a
+    co-located join must use the SAME n_buckets (at 100 TB pick
+    n_buckets ≈ cluster cores so one bucket ≈ one task)."""
     (
         df.write.mode("overwrite")
+        .option("path", path)
         .bucketBy(n_buckets, *bucket_cols)
         .sortBy(*bucket_cols)
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def salted_join(

@@ -55,7 +55,7 @@ def neighbor_postings(
     decode dictionary.
 
     At 100 TB this is an INGEST/INDEX-BUILD artifact, exactly like
-    the bucketed GraphStore snapshot: three similarity surfaces
+    the bucketed KG snapshot: three similarity surfaces
     (similar pairs, Jaccard link prediction, RA link prediction) read
     the same index, so the registry materializes it to parquet once
     per (session, sf_dir) instead of re-shuffling the edge table per

@@ -306,11 +306,12 @@ class GraphStore:
     - ``path/_CURRENT`` holds the newest committed version ``N``. A
       ``v{N+1}`` directory without a commit is an unfinished write and
       is never read.
-    - ``path/v{N}/_TYPE`` names the version's kind: ``snapshot``,
-      ``snapshot:bucketed`` or ``delta:<op>`` for an op of
-      ``DELTA_OPS``. A version without the marker is a snapshot.
-    - A snapshot holds ``v{N}/<table>`` for each table of ``SCHEMAS``;
-      a bucketed one also registers each table in the catalog.
+    - ``path/v{N}/_TYPE`` names the version's kind: ``snapshot`` or
+      ``delta:<op>`` for an op of ``DELTA_OPS``. A version without the
+      marker is a snapshot.
+    - A snapshot holds ``v{N}/<table>`` for each table of ``SCHEMAS``,
+      as plain parquet. Every version is files under ``v{N}/`` only;
+      a write touches no catalog.
     - A delta holds ``v{N}/<payload name>`` for each payload its op
       declares, under the declared schema. The payload is the op's
       *prepared* batch: sanitized, filtered and deduplicated once, at
@@ -318,7 +319,10 @@ class GraphStore:
 
     A store holding deltas written before payloads were stored
     prepared (raw batches) must be checkpointed by that older code
-    first: this code folds a payload as it finds it.
+    first: this code folds a payload as it finds it. A store holding a
+    ``snapshot:bucketed`` version (catalog-registered bucketed tables,
+    which only the per-session temp artifact of ``registry._kg`` ever
+    held) is not readable either: a read anchors on ``snapshot`` only.
 
     Every frame is selected and cast to its declared schema when it is
     written, and read back under that schema, so no read infers one.
@@ -340,8 +344,7 @@ class GraphStore:
     ``MAX_DELTA_CHAIN``, so no caller has to. Each upsert delta roughly
     doubles the entities plan; 4 keeps reads within about 3× of chain 0
     and checkpoints out of ``perfbench`` sessions (≤ 3 deltas each). A
-    checkpoint adds a full snapshot that nothing vacuums, and a plain
-    one even when the anchor was bucketed.
+    checkpoint adds a full snapshot that nothing vacuums.
     """
 
     TABLES = tuple(SCHEMAS)
@@ -376,14 +379,6 @@ class GraphStore:
             lambda batch: (_prepare_delete_relations(batch),),
             lambda e, o, r, batch: (e, o, _fold_delete_relations(r, batch)),
         ),
-    }
-    # Natural join keys: bucketing each table on its key makes
-    # entities⋈observations (name = entity_name) and
-    # entities⋈relations (name = source) exchange-free.
-    BUCKET_KEYS = {
-        "entities": "name",
-        "observations": "entity_name",
-        "relations": "source",
     }
 
     def __init__(self, spark: SparkSession, path: str):
@@ -425,10 +420,10 @@ class GraphStore:
         except FileNotFoundError:
             return "snapshot"
 
-    def _chain(self, version: int | None) -> tuple[int, str, list[tuple[int, str]]]:
+    def _chain(self, version: int | None) -> tuple[int, list[tuple[int, str]]]:
         """What a read at ``version`` (default: current) folds →
-        ``(anchor, anchor kind, [(delta version, kind), ...])``, deltas
-        oldest first. The anchor is the newest snapshot at or below
+        ``(anchor, [(delta version, kind), ...])``, deltas oldest
+        first. The anchor is the newest snapshot at or below
         ``version``. Only committed versions can be read."""
         current = self.current_version()
         v = current if version is None else version
@@ -438,8 +433,8 @@ class GraphStore:
         deltas = []
         for x in reversed(below):
             kind = self.version_type(x)
-            if kind.startswith("snapshot"):
-                return x, kind, deltas[::-1]
+            if kind == "snapshot":
+                return x, deltas[::-1]
             deltas.append((x, kind))
         raise FileNotFoundError(
             f"no anchor snapshot at or below v{v} at {self.path}"
@@ -455,17 +450,10 @@ class GraphStore:
         delta in ``(anchor, version]`` through the batch merge
         functions. The result is a lazy plan; no data moves until an
         action runs."""
-        anchor, kind, deltas = self._chain(version)
-        if kind == "snapshot:bucketed":
-            tables = {
-                tbl: self.spark.table(self._bucket_table(tbl, anchor))
-                for tbl in self.TABLES
-            }
-        else:
-            tables = {
-                tbl: self._load(anchor, tbl, schema)
-                for tbl, schema in SCHEMAS.items()
-            }
+        anchor, deltas = self._chain(version)
+        tables = {
+            tbl: self._load(anchor, tbl, schema) for tbl, schema in SCHEMAS.items()
+        }
         for dv, kind in deltas:
             tables = self._apply_delta(tables, dv, kind)
         return tables
@@ -489,45 +477,19 @@ class GraphStore:
             f.write(str(v))
         os.replace(tmp, self._version_file())
 
-    def _bucket_table(self, table: str, version: int) -> str:
-        import hashlib
-
-        digest = hashlib.md5(self.path.encode()).hexdigest()[:8]
-        return f"gs_{digest}_v{version}_{table}"
-
     def _write_version(
-        self,
-        kind: str,
-        frames: dict[str, DataFrame],
-        schemas: dict[str, str],
-        n_buckets: int | None = None,
+        self, kind: str, frames: dict[str, DataFrame], schemas: dict[str, str]
     ) -> int:
         """Write ``frames`` as the next version and commit it — the one
         place a version number is claimed. Each frame is selected and
-        cast to its schema in ``schemas``; a name ``schemas`` does not
-        declare, or one it declares but ``frames`` lacks, raises
-        ``ValueError``. ``n_buckets`` writes bucketed catalog tables
-        instead of plain parquet."""
+        cast to its schema in ``schemas`` and written as parquet under
+        ``v{N}/``; a name ``schemas`` does not declare, or one it
+        declares but ``frames`` lacks, raises ``ValueError``."""
         _require_names(kind, frames, schemas)
         v = self.current_version() + 1
         for name, schema in schemas.items():
-            w = _conform(frames[name], schema).write.mode("overwrite")
-            if n_buckets is None:
-                w.parquet(self._dir(v, name))
-                continue
-            key = self.BUCKET_KEYS[name]
-            (
-                # explicit path → an EXTERNAL table whose data lives
-                # inside the store's version dir: the catalog holds
-                # only bucketing metadata, so this works under any
-                # session whose warehouse dir (CWD-relative by
-                # default) is unwritable, and vacuum's rmtree of
-                # the version dir reclaims the data files
-                w.option("path", self._dir(v, name))
-                .bucketBy(n_buckets, key)
-                .sortBy(key)
-                .format("parquet")
-                .saveAsTable(self._bucket_table(name, v))
+            _conform(frames[name], schema).write.mode("overwrite").parquet(
+                self._dir(v, name)
             )
         os.makedirs(self._dir(v), exist_ok=True)
         with open(self._dir(v, "_TYPE"), "w") as f:
@@ -535,26 +497,10 @@ class GraphStore:
         self._commit_version(v)
         return v
 
-    def write(
-        self,
-        tables: dict[str, DataFrame],
-        bucketed: bool = False,
-        n_buckets: int = 32,
-    ) -> int:
+    def write(self, tables: dict[str, DataFrame]) -> int:
         """Write a FULL snapshot (cost O(store) — use the ``apply_*``
-        delta writers for incremental batches).
-
-        ``bucketed=True`` persists each table as a managed
-        bucketed+sorted table on its natural join key (BUCKET_KEYS),
-        so entity⋈observation / entity⋈relation reads off this
-        snapshot are exchange-free — the ingest-time layout a
-        read-heavy 100 TB KG wants. The version directory still holds
-        the ``_TYPE`` marker; MVCC/time-travel semantics are
-        unchanged."""
-        kind = "snapshot:bucketed" if bucketed else "snapshot"
-        return self._write_version(
-            kind, tables, SCHEMAS, n_buckets if bucketed else None
-        )
+        delta writers for incremental batches)."""
+        return self._write_version("snapshot", tables, SCHEMAS)
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
         """Append a delta version holding only the write batch, run
@@ -600,13 +546,12 @@ class GraphStore:
     def delta_chain_length(self, version: int | None = None) -> int:
         """Number of deltas folded into a read at ``version`` — the
         read-path plan-depth metric ``write_delta`` bounds."""
-        return len(self._chain(version)[2])
+        return len(self._chain(version)[1])
 
-    def checkpoint(self, bucketed: bool = False, n_buckets: int = 32) -> int:
+    def checkpoint(self) -> int:
         """Materialize merge-on-read state into a new full snapshot,
-        resetting delta-chain depth to zero (LSM compaction).
-        ``bucketed=True`` re-establishes the join-key bucket layout
-        at the same time — compaction and clustering in one pass.
+        resetting delta-chain depth to zero (LSM compaction). Readers
+        of older versions are untouched.
 
         Each table is written in no more files than the anchor snapshot
         holds for it (at least 1): the folded plan's partition count
@@ -618,8 +563,7 @@ class GraphStore:
             tbl: df.coalesce(max(1, _parquet_files(self._dir(anchor, tbl))))
             for tbl, df in self.read().items()
         }
-        return self.write(tables, bucketed=bucketed, n_buckets=n_buckets)
-
+        return self.write(tables)
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Snapshot GC: delete all but the newest ``keep_last``
@@ -627,11 +571,16 @@ class GraphStore:
         Returns the versions removed. The MVCC contract survives: any
         reader that resolved ``_CURRENT`` before the vacuum reads a
         retained version, because retention is newest-first and the
-        pointer always names the newest."""
+        pointer always names the newest. A store with no committed
+        version has nothing to collect: an uncommitted ``v0`` may be a
+        write in progress."""
         import shutil
 
+        current = self.current_version()
+        if current < 0:
+            return []
         versions = self.list_versions()
-        keep = set(versions[-max(keep_last, 1):]) | {self.current_version()}
+        keep = set(versions[-max(keep_last, 1):]) | {current}
         # A retained delta needs its anchor snapshot and every delta in
         # between — extend retention down to the oldest such anchor so
         # merge-on-read never dangles.
@@ -640,27 +589,9 @@ class GraphStore:
         removed = []
         for v in versions:
             if v not in keep:
-                if self.version_type(v) == "snapshot:bucketed":
-                    for tbl in self.TABLES:
-                        self.spark.sql(
-                            f"DROP TABLE IF EXISTS {self._bucket_table(tbl, v)}"
-                        )
                 shutil.rmtree(self._dir(v))
                 removed.append(v)
         return removed
-
-    def compact(self, target_partitions: int = 4) -> int:
-        """Rewrite the current snapshot with each table coalesced to
-        ``target_partitions`` files — the small-file compaction an
-        upsert-heavy store needs (a checkpoint's file count tracks the
-        folded plan's partitions, not the data size). Produces a NEW
-        snapshot version (readers of old versions are untouched); on a
-        cluster this is the OPTIMIZE job an ACID table format schedules."""
-        tables = {
-            tbl: df.coalesce(target_partitions)
-            for tbl, df in self.read().items()
-        }
-        return self.write(tables)
 
     def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Row-level snapshot diff → (table_name, change, row_key):

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import atexit
 import functools
+import hashlib
 import shutil
 import tempfile
 import threading
@@ -31,6 +32,7 @@ from pyspark.sql.functions import broadcast
 
 from .analytics import events as ev_ops
 from .analytics import tpch
+from .io.layout import write_bucketed
 from .io.tables import load_tables
 from .kg import search as kg_search
 from .kg import store as kg_store
@@ -63,7 +65,7 @@ def query(name: str):
 # In a real deployment the KG tables are materialized tables written
 # by an ingest job, not views re-derived per query. Mirror that: the
 # first KG query per (session, sf_dir) derives the tables ONCE and
-# writes them through GraphStore (parquet snapshot); every query then
+# writes them as bucketed parquet tables (``_kg``); every query then
 # reads the materialized parquet — column-pruned, pushdown-friendly,
 # and free of the relations derivation cost (the lineitem⋈orders
 # distinct dominated kg_search_nodes in r01's bench). The other shared
@@ -159,17 +161,37 @@ def _write_neighbor_index(spark: SparkSession, rel: DataFrame, path: str) -> Non
     )
 
 
+# Natural join keys: bucketing each KG table on its key makes
+# entities⋈observations (name = entity_name) and
+# entities⋈relations (name = source) exchange-free.
+BUCKET_KEYS = {
+    "entities": "name",
+    "observations": "entity_name",
+    "relations": "source",
+}
+
+
 @_artifact("kg_snapshot_index_build")
 def _kg(spark: SparkSession, sf_dir: str, path: str) -> dict[str, DataFrame]:
-    store = kg_store.GraphStore(spark, path)
-    # One-time ingest, BUCKETED on each table's natural join key
-    # (entities:name, observations:entity_name, relations:source):
-    # entity⋈observation attach joins and every per-iteration
-    # rank⋈edges join in the graph algorithms read the edge side
-    # exchange-free (plan-asserted in tests/test_layout.py) — the
-    # ingest-time layout a read-heavy 100 TB KG wants.
-    store.write(kg_views.kg(load_tables(spark, sf_dir)), bucketed=True)
-    return store.read()
+    # One-time ingest of the three KG tables under the store's SCHEMAS
+    # (the oracle gate compares types), each BUCKETED on its natural
+    # join key: entity⋈observation attach joins and every
+    # per-iteration rank⋈edges join in the graph algorithms read the
+    # edge side exchange-free (plan-asserted in tests/test_layout.py)
+    # — the ingest-time layout a read-heavy 100 TB KG wants. The
+    # tables are EXTERNAL with their data under ``path``, so dropping
+    # the artifact reclaims it, and named after ``path``, so two
+    # sf_dirs in one session never share a table.
+    prefix = "kg_" + hashlib.md5(path.encode()).hexdigest()[:8]
+    tables = kg_views.kg(load_tables(spark, sf_dir))
+    for t, schema in kg_store.SCHEMAS.items():
+        write_bucketed(
+            kg_store._conform(tables[t], schema),
+            f"{prefix}_{t}",
+            [BUCKET_KEYS[t]],
+            f"{path}/{t}",
+        )
+    return {t: spark.table(f"{prefix}_{t}") for t in kg_store.SCHEMAS}
 
 
 @_artifact("nbr_postings_index_build")

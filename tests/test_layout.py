@@ -8,28 +8,27 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mcp_memory_libsql_spark.io.layout import (
-    read_table,
-    salted_join,
-    write_bucketed,
-)
+from mcp_memory_libsql_spark.io.layout import salted_join, write_bucketed
 from mcp_memory_libsql_spark.io.tables import load_tables
 from tests.conftest import broadcast_disabled
 
 
 @pytest.fixture(scope="module")
-def bucketed(spark, sf_dir):
+def bucketed(spark, sf_dir, tmp_path_factory):
     t = load_tables(spark, sf_dir)
+    root = tmp_path_factory.mktemp("bucketed")
     write_bucketed(
         t["lineitem"].select("l_orderkey", "l_extendedprice", "l_discount"),
         "b_lineitem",
         ["l_orderkey"],
+        str(root / "b_lineitem"),
         n_buckets=8,
     )
     write_bucketed(
         t["orders"].select("o_orderkey", "o_custkey", "o_orderdate"),
         "b_orders",
         ["o_orderkey"],
+        str(root / "b_orders"),
         n_buckets=8,
     )
     yield
@@ -38,8 +37,8 @@ def bucketed(spark, sf_dir):
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed):
-    li = read_table(spark, "b_lineitem")
-    o = read_table(spark, "b_orders")
+    li = spark.table("b_lineitem")
+    o = spark.table("b_orders")
     joined = li.join(o, li["l_orderkey"] == o["o_orderkey"])
     # force a non-broadcast join so the exchange question is real
     with broadcast_disabled(spark):
@@ -50,8 +49,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, bucketed):
 
 def test_bucketed_join_matches_plain_join(spark, sf_dir, bucketed):
     t = load_tables(spark, sf_dir)
-    li = read_table(spark, "b_lineitem")
-    o = read_table(spark, "b_orders")
+    li = spark.table("b_lineitem")
+    o = spark.table("b_orders")
     got = li.join(o, li["l_orderkey"] == o["o_orderkey"]).count()
     expect = (
         t["lineitem"]
@@ -214,7 +213,7 @@ def test_parquet_layout_report(spark, tmp_path):
 
 
 def test_kg_snapshot_edge_iteration_is_exchange_free(spark, sf_dir):
-    """The bucketed GraphStore snapshot (registry._kg ingest layout)
+    """The bucketed KG snapshot (registry._kg ingest layout)
     must give the graph algorithms their per-iteration edge plan with
     NO shuffle on the edge side: distinct(source,target), the
     out-degree rollup, and the rank⋈edges equi-join all reuse the
@@ -247,3 +246,22 @@ def test_kg_snapshot_edge_iteration_is_exchange_free(spark, sf_dir):
         it_join = edges_w.join(ranks, edges_w["source"] == ranks["name"])
         plan = it_join._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+def test_kg_snapshot_attach_join_is_exchange_free(spark, sf_dir):
+    """registry._kg writes each KG table under the store's declared
+    schema, and entities⋈observations (name = entity_name) reads both
+    bucketed sides pairwise: no shuffle even with broadcast off."""
+    from mcp_memory_libsql_spark.kg.store import SCHEMAS, _fields
+    from mcp_memory_libsql_spark.registry import _kg
+
+    g = _kg(spark, sf_dir)
+    for t, schema in SCHEMAS.items():
+        got = [(f.name, f.dataType.simpleString()) for f in g[t].schema]
+        assert got == _fields(schema), t
+    e, o = g["entities"], g["observations"]
+    joined = e.join(o, e["name"] == o["entity_name"])
+    with broadcast_disabled(spark):
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert "SortMergeJoin" in plan
