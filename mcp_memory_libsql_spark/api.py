@@ -52,7 +52,7 @@ import unicodedata
 from pyspark.sql import SparkSession
 
 from .kg import search as kg_search
-from .kg.store import SCHEMAS, GraphStore, _local_frame
+from .kg.store import GraphStore, _local_frame
 from .sanitize import (
     MAX_ENTITY_NAME_LENGTH,
     MAX_ENTITY_TYPE_LENGTH,
@@ -61,7 +61,6 @@ from .sanitize import (
     MAX_RELATION_TYPE_LENGTH,
 )
 
-_DELETE_NAMES_SCHEMA = GraphStore.DELTA_OPS["delete_entities"][0]["names"]
 _LONE_SURROGATE = re.compile("[\ud800-\udfff]")
 
 
@@ -106,6 +105,19 @@ def sanitize_text(s: str, max_length: int) -> str:
     return _strip_edges(_strip_edges(collapsed)[:max_length])
 
 
+def _field(value, max_length: int, invalid: str, emptied: str) -> str:
+    """``value`` scrubbed and sanitized to ``max_length`` chars; raises
+    ``ValueError(invalid)`` unless it is a non-blank string, and
+    ``ValueError(emptied)`` if sanitizing leaves nothing."""
+    value = _scrub(value)
+    if not isinstance(value, str) or value.strip() == "":
+        raise ValueError(invalid)
+    safe = sanitize_text(value, max_length)
+    if safe == "":
+        raise ValueError(emptied)
+    return safe
+
+
 class MemoryClient:
     """The reference's six MCP tools as Python methods over a
     GraphStore directory. See module docstring for the contract."""
@@ -121,6 +133,14 @@ class MemoryClient:
     def _stamp(self) -> int:
         return self.store.current_version() + 1
 
+    def _write_delta(self, op: str, **rows: list[tuple]) -> None:
+        """Store an ``op`` delta whose payloads are ``rows`` (payload
+        name → tuples), each under the schema ``op`` declares for it."""
+        schemas = GraphStore.DELTA_OPS[op][0]
+        self.store.write_delta(op, {
+            n: _local_frame(self.spark, r, schemas[n]) for n, r in rows.items()
+        })
+
     def create_entities(self, entities: list[dict]) -> None:
         ts = self._stamp()
         # keyed by sanitized name: the reference applies a call's
@@ -128,55 +148,46 @@ class MemoryClient:
         # occurrence replaces the earlier ones
         rows: dict[str, tuple[str, list[str]]] = {}
         for e in entities:
-            name = _scrub(e.get("name"))
-            if not isinstance(name, str) or name.strip() == "":
-                raise ValueError("Entity name must be a non-empty string")
-            safe_name = sanitize_text(name, MAX_ENTITY_NAME_LENGTH)
-            if safe_name == "":
-                raise ValueError("Entity name is empty after sanitization")
-            etype = _scrub(e.get("entityType"))
-            if not isinstance(etype, str) or etype.strip() == "":
-                raise ValueError(
-                    f'Invalid entity type for entity "{safe_name}"'
-                )
-            safe_type = sanitize_text(etype, MAX_ENTITY_TYPE_LENGTH)
-            if safe_type == "":
-                raise ValueError(
-                    "Entity type is empty after sanitization for entity "
-                    f'"{safe_name}"'
-                )
+            name = _field(
+                e.get("name"),
+                MAX_ENTITY_NAME_LENGTH,
+                "Entity name must be a non-empty string",
+                "Entity name is empty after sanitization",
+            )
+            etype = _field(
+                e.get("entityType"),
+                MAX_ENTITY_TYPE_LENGTH,
+                f'Invalid entity type for entity "{name}"',
+                f'Entity type is empty after sanitization for entity "{name}"',
+            )
             obs = e.get("observations")
             if not isinstance(obs, list) or len(obs) == 0:
                 raise ValueError(
-                    f'Entity "{safe_name}" must have at least one observation'
+                    f'Entity "{name}" must have at least one observation'
                 )
             if len(obs) > MAX_OBSERVATIONS_PER_ENTITY:
                 raise ValueError(
-                    f'Entity "{safe_name}" exceeds maximum of '
+                    f'Entity "{name}" exceeds maximum of '
                     f"{MAX_OBSERVATIONS_PER_ENTITY} observations"
                 )
-            safe_obs = []
-            for o in map(_scrub, obs):
-                if not isinstance(o, str) or o.strip() == "":
-                    raise ValueError(
-                        f'Entity "{safe_name}" has invalid observations. '
-                        "All observations must be non-empty strings"
-                    )
-                so = sanitize_text(o, MAX_OBSERVATION_LENGTH)
-                if so == "":
-                    raise ValueError(
-                        f'Entity "{safe_name}" has an observation that is '
-                        "empty after sanitization"
-                    )
-                safe_obs.append(so)
-            rows[safe_name] = (safe_type, safe_obs)
+            invalid = (
+                f'Entity "{name}" has invalid observations. '
+                "All observations must be non-empty strings"
+            )
+            emptied = (
+                f'Entity "{name}" has an observation that is '
+                "empty after sanitization"
+            )
+            rows[name] = (
+                etype,
+                [_field(o, MAX_OBSERVATION_LENGTH, invalid, emptied) for o in obs],
+            )
         if not rows:
             return
         ent_rows = [(n, t, ts) for n, (t, _) in rows.items()]
         obs_rows = [(n, o, ts) for n, (_, obs) in rows.items() for o in obs]
-        self.store.apply_upsert(
-            _local_frame(self.spark, ent_rows, SCHEMAS["entities"]),
-            _local_frame(self.spark, obs_rows, SCHEMAS["observations"]),
+        self._write_delta(
+            "upsert", batch_entities=ent_rows, batch_observations=obs_rows
         )
 
     def create_relations(self, relations: list[dict]) -> None:
@@ -206,9 +217,7 @@ class MemoryClient:
                     "strings"
                 )
             rows.append((safe_from, safe_to, safe_type))
-        self.store.apply_create_relations(
-            _local_frame(self.spark, rows, SCHEMAS["relations"])
-        )
+        self._write_delta("create_relations", batch_relations=rows)
 
     def delete_entity(self, name: str) -> None:
         # raw-string comparison on purpose: the reference binds the
@@ -216,31 +225,23 @@ class MemoryClient:
         # a name that sanitized differently at write time is "not
         # found" there too
         name = _scrub(name)
-        g = self.store.read()
-        if g["entities"].where(g["entities"]["name"] == name).count() == 0:
+        e = self.store.read()["entities"]
+        if e.where(e["name"] == name).isEmpty():
             raise ValueError(f"Entity not found: {name}")
-        self.store.apply_delete_entities(
-            _local_frame(self.spark, [(name,)], _DELETE_NAMES_SCHEMA)
-        )
+        self._write_delta("delete_entities", names=[(name,)])
 
     def delete_relation(self, source: str, target: str, type: str) -> None:
         source, target, type = map(_scrub, (source, target, type))
-        g = self.store.read()
-        r = g["relations"]
-        hit = r.where(
+        r = self.store.read()["relations"]
+        if r.where(
             (r["source"] == source)
             & (r["target"] == target)
             & (r["relation_type"] == type)
-        ).count()
-        if hit == 0:
+        ).isEmpty():
             raise ValueError(
                 f"Relation not found: {source} -> {target} ({type})"
             )
-        self.store.apply_delete_relations(
-            _local_frame(
-                self.spark, [(source, target, type)], SCHEMAS["relations"]
-            )
-        )
+        self._write_delta("delete_relations", batch_relations=[(source, target, type)])
 
     # -------------------------------------------------------- reads
 

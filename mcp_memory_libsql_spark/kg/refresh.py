@@ -48,6 +48,10 @@ the reference's delete_entity cascades rebuild its read views
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
@@ -72,13 +76,14 @@ def _ckpt(df: DataFrame) -> DataFrame:
     a ~10⁸-char analyzed plan — but the blocks are FILES in the
     checkpoint dir, so executor storage eviction can never lose them
     (localCheckpoint's fatal failure mode under bench-scale memory
-    pressure). Sets a per-process temp checkpoint dir on first use if
-    the session has none (the vanilla driver sessions don't)."""
+    pressure). Sets a temp checkpoint dir on first use if the session
+    has none (the vanilla driver sessions don't), and deletes it when
+    the process exits: Spark leaves checkpoint files in place."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
-        import tempfile
-
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_refresh_ckpt_"))
+        path = tempfile.mkdtemp(prefix="spark_refresh_ckpt_")
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        sc.setCheckpointDir(path)
     return df.checkpoint(eager=True)
 
 
@@ -568,7 +573,7 @@ class LpaHistoryLog:
     wins-per-name (one max_by aggregation); every ``COMPACT_EVERY``
     deltas the folded view is rewritten as a fresh snapshot and the
     delta files dropped, bounding read amplification exactly like
-    GraphStore.compact (kg/store.py). Append-only regime only —
+    GraphStore.checkpoint (kg/store.py). Append-only regime only —
     deletes need a rebuild, same as the neighbor-index refresh.
 
     Result identity is pytest-pinned: after N successive deltas,
@@ -598,8 +603,6 @@ class LpaHistoryLog:
         """Write ``hist`` as the new base snapshot and drop the folded
         delta files (atomic enough for a single-writer maintenance
         job, which is the GraphStore model too)."""
-        import shutil
-
         hist.select(*self.cols).write.mode("overwrite").parquet(
             self.path + "/snapshot"
         )

@@ -19,8 +19,10 @@ logic.
   (client.ts:382-405).
 
 Each merge is two halves: a batch half (``_prepare_*``: sanitize,
-filter, deduplicate — it reads only the batch) and a state half
-(``_fold_*``: broadcast joins and unions against the stored tables).
+filter, keep one upsert row per name — it reads only the batch) and a
+state half (``_fold_upsert``, ``delete_*``: broadcast joins and unions
+against the stored tables). A delete has no batch half: its anti-joins
+ignore repeated keys.
 
 Scale: only the batch half of an upsert shuffles, and only the batch
 (its per-name windows); the state halves are broadcast joins when
@@ -241,16 +243,16 @@ def rejected_entities(batch_entities: DataFrame) -> DataFrame:
     return batch_entities.where(sanitize_entity_name(F.col("name")) == "")
 
 
-def _prepare_delete_entities(names: DataFrame) -> DataFrame:
-    return names.select("name").distinct()
-
-
-def _fold_delete_entities(
+def delete_entities(
     entities: DataFrame,
     observations: DataFrame,
     relations: DataFrame,
     names: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Cascade delete by entity name set (client.ts:340-380).
+
+    Broadcast anti-joins only: a name repeated in ``names`` removes
+    nothing more, so the batch needs no deduplication."""
     n = broadcast(names)
     e2 = entities.join(n, "name", "left_anti")
     o2 = observations.join(
@@ -261,32 +263,12 @@ def _fold_delete_entities(
     return e2, o2, r2
 
 
-def delete_entities(
-    entities: DataFrame,
-    observations: DataFrame,
-    relations: DataFrame,
-    names: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Cascade delete by entity name set (client.ts:340-380)."""
-    return _fold_delete_entities(
-        entities, observations, relations, _prepare_delete_entities(names)
-    )
-
-
-_RELATION_KEY = ["source", "target", "relation_type"]
-
-
-def _prepare_delete_relations(batch: DataFrame) -> DataFrame:
-    return batch.select(*_RELATION_KEY).distinct()
-
-
-def _fold_delete_relations(relations: DataFrame, batch: DataFrame) -> DataFrame:
-    return relations.join(broadcast(batch), _RELATION_KEY, "left_anti")
-
-
 def delete_relations(relations: DataFrame, batch: DataFrame) -> DataFrame:
-    """Remove exact (source, target, relation_type) matches."""
-    return _fold_delete_relations(relations, _prepare_delete_relations(batch))
+    """Remove exact (source, target, relation_type) matches: a broadcast
+    anti-join, so a row repeated in ``batch`` removes nothing more."""
+    return relations.join(
+        broadcast(batch), ["source", "target", "relation_type"], "left_anti"
+    )
 
 
 # Both relation ops carry the same payload: a batch of relation rows.
@@ -313,9 +295,10 @@ class GraphStore:
       as plain parquet. Every version is files under ``v{N}/`` only;
       a write touches no catalog.
     - A delta holds ``v{N}/<payload name>`` for each payload its op
-      declares, under the declared schema. The payload is the op's
-      *prepared* batch: sanitized, filtered and deduplicated once, at
-      write time, by the op's ``prepare``.
+      declares, under the declared schema. The payload is the batch as
+      the op's ``prepare`` leaves it at write time: an upsert's or a
+      relation create's sanitized and filtered once (an upsert's with
+      one row per name), a delete's as given.
 
     A store holding deltas written before payloads were stored
     prepared (raw batches) must be checkpointed by that older code
@@ -366,8 +349,8 @@ class GraphStore:
         ),
         "delete_entities": (
             {"names": "name string"},
-            lambda names: (_prepare_delete_entities(names),),
-            _fold_delete_entities,
+            lambda names: (names,),
+            delete_entities,
         ),
         "create_relations": (
             _RELATION_BATCH,
@@ -376,8 +359,8 @@ class GraphStore:
         ),
         "delete_relations": (
             _RELATION_BATCH,
-            lambda batch: (_prepare_delete_relations(batch),),
-            lambda e, o, r, batch: (e, o, _fold_delete_relations(r, batch)),
+            lambda batch: (batch,),
+            lambda e, o, r, batch: (e, o, delete_relations(r, batch)),
         ),
     }
 
@@ -498,8 +481,8 @@ class GraphStore:
         return v
 
     def write(self, tables: dict[str, DataFrame]) -> int:
-        """Write a FULL snapshot (cost O(store) — use the ``apply_*``
-        delta writers for incremental batches)."""
+        """Write a FULL snapshot (cost O(store) — use ``write_delta``
+        for incremental batches)."""
         return self._write_version("snapshot", tables, SCHEMAS)
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
@@ -523,25 +506,6 @@ class GraphStore:
         if self.delta_chain_length() > self.MAX_DELTA_CHAIN:
             self.checkpoint()
         return v
-
-    def _delta(self, op: str, *frames: DataFrame) -> int:
-        """``write_delta`` with the payload frames in declared order."""
-        return self.write_delta(op, dict(zip(self.DELTA_OPS[op][0], frames)))
-
-    def apply_upsert(
-        self, batch_entities: DataFrame, batch_observations: DataFrame
-    ) -> int:
-        """create_entities as an O(batch) delta write."""
-        return self._delta("upsert", batch_entities, batch_observations)
-
-    def apply_delete_entities(self, names: DataFrame) -> int:
-        return self._delta("delete_entities", names)
-
-    def apply_create_relations(self, batch_relations: DataFrame) -> int:
-        return self._delta("create_relations", batch_relations)
-
-    def apply_delete_relations(self, batch_relations: DataFrame) -> int:
-        return self._delta("delete_relations", batch_relations)
 
     def delta_chain_length(self, version: int | None = None) -> int:
         """Number of deltas folded into a read at ``version`` — the
@@ -602,7 +566,8 @@ class GraphStore:
         changed rows).
 
         Both sides are lazy merge-on-read plans; each table
-        contributes two anti-joins on a rendered full-row key. Rows
+        contributes two set differences (``subtract``, planned as
+        anti-joins) on a rendered full-row key. Rows
         are compared by VALUE (a changed entity shows as removed +
         added) — at 100 TB both sides read from parquet snapshots
         whose shared anchor files dominate, so the anti-joins shuffle
@@ -621,14 +586,14 @@ class GraphStore:
                     *[F.col(c).cast("string").alias(c) for c in cols]
                 )
             ).alias("row_key")
-            ka = before[tbl].select(key).distinct()
-            kb = after[tbl].select(key).distinct()
-            added = kb.join(ka, "row_key", "left_anti").select(
+            ka = before[tbl].select(key)
+            kb = after[tbl].select(key)
+            added = kb.subtract(ka).select(
                 F.lit(tbl).alias("table_name"),
                 F.lit("added").alias("change"),
                 "row_key",
             )
-            removed = ka.join(kb, "row_key", "left_anti").select(
+            removed = ka.subtract(kb).select(
                 F.lit(tbl).alias("table_name"),
                 F.lit("removed").alias("change"),
                 "row_key",

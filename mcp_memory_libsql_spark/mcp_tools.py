@@ -23,9 +23,17 @@ from __future__ import annotations
 import json
 from typing import Any
 
+from . import sanitize as caps
 from .api import MemoryClient
+from .kg.search import MAX_SEARCH_LIMIT
 
-_STR256 = {"type": "string", "maxLength": 256}
+
+def _string(max_length: int) -> dict:
+    return {"type": "string", "maxLength": max_length}
+
+
+_NAME = _string(caps.MAX_ENTITY_NAME_LENGTH)
+_RELATION_TYPE = _string(caps.MAX_RELATION_TYPE_LENGTH)
 
 TOOLS: list[dict] = [
     {
@@ -41,12 +49,12 @@ TOOLS: list[dict] = [
                     "items": {
                         "type": "object",
                         "properties": {
-                            "name": _STR256,
-                            "entityType": _STR256,
+                            "name": _NAME,
+                            "entityType": _string(caps.MAX_ENTITY_TYPE_LENGTH),
                             "observations": {
                                 "type": "array",
-                                "maxItems": 100,
-                                "items": {"type": "string", "maxLength": 4096},
+                                "maxItems": caps.MAX_OBSERVATIONS_PER_ENTITY,
+                                "items": _string(caps.MAX_OBSERVATION_LENGTH),
                             },
                         },
                         "required": ["name", "entityType", "observations"],
@@ -67,7 +75,7 @@ TOOLS: list[dict] = [
             "type": "object",
             "properties": {
                 "query": {"type": "string", "maxLength": 512},
-                "limit": {"type": "number", "maximum": 50},
+                "limit": {"type": "number", "maximum": MAX_SEARCH_LIMIT},
             },
             "required": ["query"],
         },
@@ -91,9 +99,9 @@ TOOLS: list[dict] = [
                     "items": {
                         "type": "object",
                         "properties": {
-                            "source": _STR256,
-                            "target": _STR256,
-                            "type": _STR256,
+                            "source": _NAME,
+                            "target": _NAME,
+                            "type": _RELATION_TYPE,
                         },
                         "required": ["source", "target", "type"],
                     },
@@ -116,7 +124,7 @@ TOOLS: list[dict] = [
         },
         "schema": {
             "type": "object",
-            "properties": {"name": _STR256},
+            "properties": {"name": _NAME},
             "required": ["name"],
         },
     },
@@ -133,7 +141,7 @@ TOOLS: list[dict] = [
         },
         "schema": {
             "type": "object",
-            "properties": {"source": _STR256, "target": _STR256, "type": _STR256},
+            "properties": {"source": _NAME, "target": _NAME, "type": _RELATION_TYPE},
             "required": ["source", "target", "type"],
         },
     },

@@ -1,8 +1,8 @@
 """Raw-SQL surface: register every engine table as a temp view so
 users can drive the whole engine with ``spark.sql`` — the ten
 testdata tables plus the derived KG tables (entities / observations /
-relations, materialized through GraphStore exactly as the gated
-queries read them).
+relations: ``registry._kg``'s bucketed tables, the ones the gated
+queries read).
 
 This is the "BI tool / notebook" entry point: DataFrame callers use
 ``registry.QUERIES``; SQL callers do::
@@ -13,9 +13,9 @@ This is the "BI tool / notebook" entry point: DataFrame callers use
 
 The ten raw-table views are lazy plans over parquet — registering
 them costs nothing until queried — while ``kg=True`` (the default)
-runs the one-time KG INGEST up front (derive + GraphStore parquet
-write, cached per session/sf_dir): the kg_* views then read the
-materialized snapshot like every gated query. Pass ``kg=False`` for
+runs the one-time KG INGEST up front (derive + bucketed write through
+``io.layout.write_bucketed``, cached per session/sf_dir): the kg_*
+views then read those tables like every gated query. Pass ``kg=False`` for
 a zero-cost raw-tables-only registration. Every Catalyst
 optimization (pushdown, pruning, AQE) applies to user SQL exactly as
 to the built-in queries.

@@ -152,15 +152,13 @@ def entity_upsert_stream(
         # observation-only rows carry a null entity_type; they must
         # NOT enter the entity batch (NULL sorts first in the LWW
         # tiebreak and would null the stored type)
-        batch_e = (
-            batch_df.where(F.col("entity_type").isNotNull())
-            .select("name", "entity_type", "created_at")
-            .distinct()
-        )
+        batch_e = batch_df.where(F.col("entity_type").isNotNull())
         batch_o = batch_df.where(F.col("content").isNotNull()).select(
             F.col("name").alias("entity_name"), "content", "created_at"
         )
-        store.apply_upsert(batch_e, batch_o)
+        store.write_delta(
+            "upsert", {"batch_entities": batch_e, "batch_observations": batch_o}
+        )
 
     return _store_stream(
         spark,
@@ -333,7 +331,9 @@ def relation_upsert_stream(
         spark,
         dir_path,
         SCHEMAS["relations"],
-        store.apply_create_relations,
+        lambda batch: store.write_delta(
+            "create_relations", {"batch_relations": batch}
+        ),
         checkpoint_dir or store.path + "/_stream_ckpt_relations",
     )
 

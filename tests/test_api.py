@@ -59,26 +59,36 @@ def test_updates_existing_entity_on_duplicate_name(client):
     assert e["observations"] == ["new"]
 
 
-def test_rejects_empty_entity_name(client):
-    with pytest.raises(ValueError, match="non-empty string"):
-        client.create_entities(
-            [{"name": "", "entityType": "x", "observations": ["y"]}]
-        )
-
-
-def test_rejects_empty_observations(client):
-    with pytest.raises(ValueError, match="at least one observation"):
-        client.create_entities(
-            [{"name": "a", "entityType": "x", "observations": []}]
-        )
-
-
-def test_rejects_too_many_observations(client):
-    with pytest.raises(ValueError, match="exceeds maximum of 100"):
-        client.create_entities(
-            [{"name": "a", "entityType": "x",
-              "observations": [f"o{i}" for i in range(101)]}]
-        )
+@pytest.mark.parametrize("entity, message", [
+    ({"name": "", "entityType": "x", "observations": ["y"]},
+     "Entity name must be a non-empty string"),
+    ({"name": "\x00\x01", "entityType": "x", "observations": ["y"]},
+     "Entity name is empty after sanitization"),
+    ({"name": "a", "entityType": 7, "observations": ["y"]},
+     'Invalid entity type for entity "a"'),
+    ({"name": "a", "entityType": "\u200b", "observations": ["y"]},
+     'Entity type is empty after sanitization for entity "a"'),
+    ({"name": "a", "entityType": "x", "observations": []},
+     'Entity "a" must have at least one observation'),
+    ({"name": "a", "entityType": "x",
+      "observations": [f"o{i}" for i in range(101)]},
+     'Entity "a" exceeds maximum of 100 observations'),
+    ({"name": "a", "entityType": "x", "observations": ["y", " "]},
+     'Entity "a" has invalid observations. '
+     "All observations must be non-empty strings"),
+    ({"name": "a", "entityType": "x", "observations": ["y", "\x07"]},
+     'Entity "a" has an observation that is empty after sanitization'),
+], ids=[
+    "empty-name", "name-sanitized-empty", "invalid-type",
+    "type-sanitized-empty", "no-observations", "too-many-observations",
+    "invalid-observation", "observation-sanitized-empty",
+])
+def test_create_entities_rejects(client, entity, message):
+    # client.test.ts: each validation error, word for word (client.ts:66-117)
+    with pytest.raises(ValueError) as err:
+        client.create_entities([entity])
+    assert str(err.value) == message
+    assert client.store.delta_chain_length() == 0
 
 
 def test_sanitizes_control_characters(client):
@@ -502,6 +512,15 @@ class TestJvmLocalCalls:
              {"from": "b", "to": "c", "relationType": "r"}]
         ))
         assert n == 1
+
+    def test_delete_relation_at_chain_zero_is_two_jobs(self, spark, tmp_path):
+        # the existence check stops at the first match, then the write
+        client = MemoryClient(spark, str(tmp_path / "delete-jobs"))
+        client.create_relations([{"from": "a", "to": "b", "relationType": "r"}])
+        client.store.checkpoint()
+        assert client.store.delta_chain_length() == 0
+        assert _jobs(spark, lambda: client.delete_relation("a", "b", "r")) <= 2
+        assert client.store.read()["relations"].count() == 0
 
     def test_replies_at_chain_zero_need_few_jobs(self, spark, tmp_path):
         from mcp_memory_libsql_spark import mcp_tools as mt

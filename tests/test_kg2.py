@@ -186,7 +186,9 @@ def test_graphstore_delta_upsert_matches_eager(spark, tmp_path):
         {tuple(r) for r in want_o.collect()},
     )
 
-    v = store.apply_upsert(b_ent, b_obs)
+    v = store.write_delta(
+        "upsert", {"batch_entities": b_ent, "batch_observations": b_obs}
+    )
     assert store.version_type(v) == "delta:upsert"
     assert store.delta_chain_length() == 1
     got = store.read()
@@ -199,20 +201,15 @@ def test_graphstore_delta_upsert_matches_eager(spark, tmp_path):
 
 def test_graphstore_delta_chain_and_checkpoint(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
-    store.apply_create_relations(
-        spark.createDataFrame(
-            [("B", "A", "hosted")],
-            "source string, target string, relation_type string",
-        )
-    )
-    store.apply_delete_relations(
-        spark.createDataFrame(
-            [("A", "B", "visited")],
-            "source string, target string, relation_type string",
-        )
-    )
-    store.apply_delete_entities(
-        spark.createDataFrame([("B",)], "name string")
+    rel = "source string, target string, relation_type string"
+    store.write_delta("create_relations", {
+        "batch_relations": spark.createDataFrame([("B", "A", "hosted")], rel)
+    })
+    store.write_delta("delete_relations", {
+        "batch_relations": spark.createDataFrame([("A", "B", "visited")], rel)
+    })
+    store.write_delta(
+        "delete_entities", {"names": spark.createDataFrame([("B",)], "name string")}
     )
     assert store.delta_chain_length() == 3
     # B gone everywhere; hosted relation (B->A) cascaded away too
@@ -238,12 +235,12 @@ def test_graphstore_delta_chain_and_checkpoint(spark, tmp_path):
 def test_graphstore_vacuum_keeps_delta_anchor(spark, tmp_path):
     store = _mk_store(spark, tmp_path)  # v0 empty snap, v1 data snap
     for i in range(3):  # v2..v4 deltas anchored on v1
-        store.apply_create_relations(
-            spark.createDataFrame(
+        store.write_delta("create_relations", {
+            "batch_relations": spark.createDataFrame(
                 [(f"A", "B", f"r{i}")],
                 "source string, target string, relation_type string",
             )
-        )
+        })
     removed = store.vacuum(keep_last=2)
     # v0 removable; v1 is the anchor of retained deltas — must survive
     assert removed == [0]
@@ -268,24 +265,26 @@ def test_graphstore_vacuum_without_a_committed_version(spark, tmp_path):
 def _mk_delta_store(spark, tmp_path):
     """``_mk_store``'s snapshot followed by one delta of each op."""
     store = _mk_store(spark, tmp_path)
-    store.apply_upsert(
-        spark.createDataFrame(
+    store.write_delta("upsert", {
+        "batch_entities": spark.createDataFrame(
             [("C", "thing", 30)],
             "name string, entity_type string, created_at bigint",
         ),
-        spark.createDataFrame(
+        "batch_observations": spark.createDataFrame(
             [("C", "is new", 30)],
             "entity_name string, content string, created_at bigint",
         ),
-    )
+    })
     rel = "source string, target string, relation_type string"
-    store.apply_create_relations(
-        spark.createDataFrame([("C", "A", "knows")], rel)
+    store.write_delta("create_relations", {
+        "batch_relations": spark.createDataFrame([("C", "A", "knows")], rel)
+    })
+    store.write_delta("delete_relations", {
+        "batch_relations": spark.createDataFrame([("A", "B", "visited")], rel)
+    })
+    store.write_delta(
+        "delete_entities", {"names": spark.createDataFrame([("B",)], "name string")}
     )
-    store.apply_delete_relations(
-        spark.createDataFrame([("A", "B", "visited")], rel)
-    )
-    store.apply_delete_entities(spark.createDataFrame([("B",)], "name string"))
     return store
 
 
@@ -419,17 +418,23 @@ def test_graphstore_write_delta_bounds_the_chain(spark, tmp_path):
     writes = [
         ("upsert", upsert(("A", "human", 99, "likes coffee"), ("C", "thing", 30, "is new"))),
         ("create_relations", rels(("C", "A", "knows"), ("B", "C", "sees"))),
-        ("delete_relations", rels(("A", "B", "visited"))),
+        ("delete_relations", rels(("A", "B", "visited"), ("A", "B", "visited"))),
         ("upsert", upsert(("B", "city", 50, "is warm"), ("D", "tool", 50, "cuts"))),
-        ("delete_entities", {"names": spark.createDataFrame([("C",)], "name string")}),
+        ("delete_entities", {"names": spark.createDataFrame([("C",), ("C",)], "name string")}),
         ("upsert", upsert(("C", "thing", 60, "is back"), ("A", "robot", 70, "beeps"))),
     ]
     store = _mk_store(spark, tmp_path)  # v0 empty snapshot, v1 data
     want = {v: rows(store.read(version=v)) for v in (0, 1)}
     for i, (op, payload) in enumerate(writes, 1):
+        before = want[max(want)]
         v = store.write_delta(op, payload)
         assert store.delta_chain_length() <= 4, (i, store.delta_chain_length())
-        want[v] = eager(want[max(want)], op, payload)
+        want[v] = eager(before, op, payload)
+        if op.startswith("delete_"):
+            # a delete batch is stored as given: a repeated key removes
+            # nothing more than the deduplicated batch does
+            dedup = {n: df.distinct() for n, df in payload.items()}
+            assert want[v] == eager(before, op, dedup), op
         if i == 5:
             # the write that takes the chain to 5 checkpoints after
             # committing its delta, which stays readable
@@ -467,16 +472,16 @@ def test_graphstore_write_delta_rejects_undeclared_payload(spark, tmp_path):
 
 def test_graphstore_payload_conforms_to_declared_schema(spark, tmp_path):
     store = _mk_store(spark, tmp_path)
-    v = store.apply_upsert(
-        spark.createDataFrame(
+    v = store.write_delta("upsert", {
+        "batch_entities": spark.createDataFrame(
             [("C", "thing", 30, "extra")],
             "name string, entity_type string, created_at int, note string",
         ),
-        spark.createDataFrame(
+        "batch_observations": spark.createDataFrame(
             [("C", "is new", 30)],
             "entity_name string, content string, created_at int",
         ),
-    )
+    })
     declared = [
         ("name", "string"), ("entity_type", "string"), ("created_at", "bigint")
     ]
@@ -601,7 +606,9 @@ def test_graphstore_diff_tracks_upsert_and_delete(spark, tmp_path):
         [("A", "likes coffee", 99), ("C", "is new", 30)],
         "entity_name string, content string, created_at bigint",
     )
-    store.apply_upsert(b_ent, b_obs)
+    store.write_delta(
+        "upsert", {"batch_entities": b_ent, "batch_observations": b_obs}
+    )
     d = {
         (r.table_name, r.change, r.row_key)
         for r in store.diff(v1).collect()

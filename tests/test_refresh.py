@@ -731,3 +731,30 @@ def test_refresh_plan_probe_subtrees_stay_deduped(spark, sf_dir):
     # regression being pinned is the ~62-scan per-consumer re-planning
     n_scans = plan.count("Scan parquet")
     assert n_scans <= 52, f"{n_scans} parquet scans - probe dedup regressed?"
+
+
+def test_ckpt_dir_is_removed_at_exit(tmp_path):
+    """``_ckpt`` makes a temp checkpoint dir for a session that has
+    none; Spark leaves checkpoint files in place, so the dir must go
+    when the process exits."""
+    import glob
+    import os
+    import subprocess
+    import sys
+
+    script = (
+        "from pyspark.sql import SparkSession\n"
+        "from mcp_memory_libsql_spark.kg.refresh import _ckpt\n"
+        "spark = SparkSession.builder.master('local[1]').getOrCreate()\n"
+        "assert _ckpt(spark.range(10)).count() == 10\n"
+        "print(spark.sparkContext.getCheckpointDir())\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=repo)
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "spark_refresh_ckpt_" in out.stdout.splitlines()[-1]
+    assert glob.glob(str(tmp_path / "spark_refresh_ckpt_*")) == []

@@ -90,11 +90,14 @@ def test_entity_upsert_stream(spark, tmp_path):
     q = pipeline.entity_upsert_stream(spark, str(src), store)
     try:
         q.processAllAvailable()
-        # second batch updates E1 and adds E2
+        # second batch updates E1 and adds E2, and E3 whose two
+        # observation rows both carry its entity_type
         with open(src / "b2.json", "w") as f:
             for rec in (
                 {"name": "E1", "entity_type": "t2", "created_at": 2, "content": "o2"},
                 {"name": "E2", "entity_type": "t1", "created_at": 2, "content": "oX"},
+                {"name": "E3", "entity_type": "t3", "created_at": 2, "content": "p1"},
+                {"name": "E3", "entity_type": "t3", "created_at": 2, "content": "p2"},
             ):
                 f.write(json.dumps(rec) + "\n")
         q.processAllAvailable()
@@ -105,8 +108,11 @@ def test_entity_upsert_stream(spark, tmp_path):
         store.version_type(v) for v in store.list_versions()
     ] == ["snapshot", "delta:upsert", "delta:upsert"]
     t = store.read()
-    ents = {r.name: r.entity_type for r in t["entities"].collect()}
-    assert ents == {"E1": "t2", "E2": "t1"}
+    rows = t["entities"].collect()
+    assert sorted(r.name for r in rows) == ["E1", "E2", "E3"]
+    assert {r.name: r.entity_type for r in rows} == {"E1": "t2", "E2": "t1", "E3": "t3"}
+    e3 = t["observations"].where(F.col("entity_name") == "E3").collect()
+    assert sorted(r.content for r in e3) == ["p1", "p2"]
     obs = {
         r.content
         for r in t["observations"].where(F.col("entity_name") == "E1").collect()
@@ -523,15 +529,15 @@ def test_relation_upsert_stream(spark, tmp_path):
     store = GraphStore(spark, str(tmp_path / "rel_store"))
     store.init_empty()
     # relations require existing endpoints
-    store.apply_upsert(
-        spark.createDataFrame(
+    store.write_delta("upsert", {
+        "batch_entities": spark.createDataFrame(
             [("A", "t", 1), ("B", "t", 1), ("C", "t", 1)],
             "name string, entity_type string, created_at bigint",
         ),
-        spark.createDataFrame(
+        "batch_observations": spark.createDataFrame(
             [], "entity_name string, content string, created_at bigint"
         ),
-    )
+    })
     src = tmp_path / "rel_src"
     src.mkdir()
     with open(src / "r1.json", "w") as f:

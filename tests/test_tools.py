@@ -37,3 +37,20 @@ def test_copies_corpus_multiplies_facts_and_keeps_joins(spark, sf_dir, tmp_path)
     src, out = q1(sf_dir), q1(dst)
     assert src
     assert out == {g: 2 * n for g, n in src.items()}
+
+
+def test_dump_plans_flags_a_plan_that_only_scans_a_checkpoint(spark, sf_dir):
+    from tools.dump_plans import NOTHING_TO_COMPARE, plan_text
+
+    def flagged(df):
+        return plan_text(df).startswith(NOTHING_TO_COMPARE)
+
+    # kg_pagerank's frame scans its localCheckpointed ranks
+    assert flagged(QUERIES["kg_pagerank"](spark, sf_dir))
+    assert not flagged(QUERIES["kg_degree"](spark, sf_dir))
+    counts = spark.range(20).groupBy((F.col("id") % 3).alias("k")).count()
+    assert not flagged(counts)
+    ckpt = counts.localCheckpoint()
+    assert flagged(ckpt.where("k > 0").select("k"))
+    # a join over checkpoints still has a join strategy to compare
+    assert not flagged(ckpt.join(ckpt.withColumnRenamed("count", "c"), "k"))
