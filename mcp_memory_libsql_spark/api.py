@@ -46,6 +46,7 @@ before use — the form the store holds them in.
 
 from __future__ import annotations
 
+import contextlib
 import re
 import unicodedata
 
@@ -126,7 +127,9 @@ class MemoryClient:
         self.spark = spark
         self.store = GraphStore(spark, path)
         if self.store.current_version() < 0:
-            self.store.init_empty()
+            # a client opening the same new path may create v0 first
+            with contextlib.suppress(FileExistsError):
+                self.store.init_empty()
 
     # ------------------------------------------------------- writes
 

@@ -7,7 +7,10 @@ batch merges over immutable snapshots*: each write API takes the
 current table(s) plus a batch and returns the next snapshot. A
 parquet-backed ``GraphStore`` persists snapshots; on a cluster this
 would be an ACID table format, with the merge below as the MERGE
-logic.
+logic. A version is published by renaming its finished directory to
+``v{N}``, so it exists exactly when that directory does (for a store
+written by earlier code, which moved a pointer file, see
+``GraphStore``).
 
 - ``create_entities`` = upsert: batch rows replace existing entities
   (last-writer-wins within the batch) and *replace* all their
@@ -32,7 +35,11 @@ stored tables never shuffle.
 
 from __future__ import annotations
 
+import contextlib
+import errno
 import os
+import shutil
+import uuid
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -278,15 +285,20 @@ _RELATION_BATCH = {"batch_relations": SCHEMAS["relations"]}
 class GraphStore:
     """Parquet-backed persistent snapshot store for the three KG tables.
 
-    Writes produce a new version directory and swap a ``_CURRENT``
-    pointer file — coarse-grained MVCC that maps onto an ACID table
-    format on a real cluster.
+    **Publish rule.** A write puts its files and its ``_TYPE`` marker
+    in a private pending directory under ``path``, then makes it
+    version ``N`` with one ``os.rename`` onto ``v{N}``. A version
+    exists exactly when its directory does, so no reader or writer
+    sees a half-written one, and two writers cannot both take ``v{N}``:
+    the loser's rename fails and it claims again (a delta) or raises
+    (a snapshot). This is coarse-grained MVCC with no pointer file and
+    no lock; on a real cluster it maps onto an ACID table format.
 
     **On-disk format.** ``SCHEMAS`` and ``DELTA_OPS`` declare it, and
     no other code spells out a table schema, delta op or payload:
 
-    - ``path/_CURRENT`` holds the newest committed version ``N``. A
-      ``v{N+1}`` directory without a commit is an unfinished write and
+    - The newest ``path/v{N}`` directory is the current version. Any
+      other entry of ``path`` (a pending write, a stream checkpoint)
       is never read.
     - ``path/v{N}/_TYPE`` names the version's kind: ``snapshot`` or
       ``delta:<op>`` for an op of ``DELTA_OPS``. A version without the
@@ -300,12 +312,17 @@ class GraphStore:
       relation create's sanitized and filtered once (an upsert's with
       one row per name), a delete's as given.
 
-    A store holding deltas written before payloads were stored
-    prepared (raw batches) must be checkpointed by that older code
-    first: this code folds a payload as it finds it. A store holding a
-    ``snapshot:bucketed`` version (catalog-registered bucketed tables,
-    which only the per-session temp artifact of ``registry._kg`` ever
-    held) is not readable either: a read anchors on ``snapshot`` only.
+    A store written by earlier code, which committed a version by
+    moving a pointer file, may hold a ``v{N}`` above the pointer, left
+    by a writer that crashed before its commit. This code ignores the
+    pointer and would read that directory as current: delete it before
+    opening the store. A store holding deltas written before payloads
+    were stored prepared (raw batches) must be checkpointed by that
+    older code first: this code folds a payload as it finds it. A store
+    holding a ``snapshot:bucketed`` version (catalog-registered
+    bucketed tables, which only the per-session temp artifact of
+    ``registry._kg`` ever held) is not readable either: a read anchors
+    on ``snapshot`` only.
 
     Every frame is selected and cast to its declared schema when it is
     written, and read back under that schema, so no read infers one.
@@ -321,6 +338,8 @@ class GraphStore:
     a write costs O(batch) — at 100 TB the base is never rewritten per
     batch — while batches stay broadcast-sized, so merge-on-read
     composes broadcast joins and the base table still never shuffles.
+    A stored payload does not depend on the version it lands on, which
+    is what lets a delta that lost its claim simply claim the next one.
 
     **Chain bound.** ``write_delta`` checkpoints (writes the merged state
     as a full snapshot) once its delta takes the chain past
@@ -368,15 +387,9 @@ class GraphStore:
         self.spark = spark
         self.path = path
 
-    def _version_file(self) -> str:
-        return os.path.join(self.path, "_CURRENT")
-
     def current_version(self) -> int:
-        try:
-            with open(self._version_file()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
+        """The newest version, or -1 for a store with none."""
+        return max(self.list_versions(), default=-1)
 
     def _dir(self, version: int, name: str = "") -> str:
         return os.path.join(self.path, f"v{version}", name)
@@ -407,14 +420,13 @@ class GraphStore:
         """What a read at ``version`` (default: current) folds →
         ``(anchor, [(delta version, kind), ...])``, deltas oldest
         first. The anchor is the newest snapshot at or below
-        ``version``. Only committed versions can be read."""
-        current = self.current_version()
-        v = current if version is None else version
-        below = [x for x in self.list_versions() if x <= v]
-        if not 0 <= v <= current or not below or below[-1] != v:
-            raise FileNotFoundError(f"no committed version v{v} at {self.path}")
+        ``version``."""
+        versions = self.list_versions()
+        v = max(versions, default=-1) if version is None else version
+        if v not in versions:
+            raise FileNotFoundError(f"no version v{v} at {self.path}")
         deltas = []
-        for x in reversed(below):
+        for x in reversed(versions[: versions.index(v) + 1]):
             kind = self.version_type(x)
             if kind == "snapshot":
                 return x, deltas[::-1]
@@ -453,37 +465,54 @@ class GraphStore:
             zip(self.TABLES, fold(*(tables[t] for t in self.TABLES), *frames))
         )
 
-    def _commit_version(self, v: int) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        tmp = self._version_file() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(v))
-        os.replace(tmp, self._version_file())
-
     def _write_version(
-        self, kind: str, frames: dict[str, DataFrame], schemas: dict[str, str]
+        self,
+        kind: str,
+        frames: dict[str, DataFrame],
+        schemas: dict[str, str],
+        version: int | None = None,
     ) -> int:
-        """Write ``frames`` as the next version and commit it — the one
-        place a version number is claimed. Each frame is selected and
-        cast to its schema in ``schemas`` and written as parquet under
-        ``v{N}/``; a name ``schemas`` does not declare, or one it
-        declares but ``frames`` lacks, raises ``ValueError``."""
+        """Write ``frames`` and publish them as a version — the one
+        place a version is claimed. Each frame is selected and cast to
+        its schema in ``schemas`` and written as parquet into a pending
+        directory, which one ``os.rename`` then makes ``v{N}``. With
+        ``version=None`` the write takes the next free version, at
+        whatever head other writers have moved to; otherwise it claims
+        exactly ``version`` and raises ``FileExistsError`` if another
+        write took it. A name ``schemas`` does not declare, or one it
+        declares but ``frames`` lacks, raises ``ValueError``. A write
+        that raises leaves no pending directory behind."""
         _require_names(kind, frames, schemas)
-        v = self.current_version() + 1
-        for name, schema in schemas.items():
-            _conform(frames[name], schema).write.mode("overwrite").parquet(
-                self._dir(v, name)
-            )
-        os.makedirs(self._dir(v), exist_ok=True)
-        with open(self._dir(v, "_TYPE"), "w") as f:
-            f.write(kind)
-        self._commit_version(v)
-        return v
+        # Spark creates it, so it gets the mode of any other directory
+        # it writes; the name never parses as a version
+        pending = os.path.join(self.path, f"_pending-{uuid.uuid4().hex}")
+        try:
+            for name, schema in schemas.items():
+                _conform(frames[name], schema).write.parquet(
+                    os.path.join(pending, name)
+                )
+            with open(os.path.join(pending, "_TYPE"), "w") as f:
+                f.write(kind)
+            while True:
+                v = self.current_version() + 1 if version is None else version
+                try:
+                    os.rename(pending, os.path.join(self.path, f"v{v}"))
+                    return v
+                except OSError as e:
+                    if e.errno not in (errno.EEXIST, errno.ENOTEMPTY):
+                        raise
+                    if version is not None:
+                        raise FileExistsError(f"v{v} of {self.path} is taken") from e
+        finally:
+            shutil.rmtree(pending, ignore_errors=True)
 
     def write(self, tables: dict[str, DataFrame]) -> int:
         """Write a FULL snapshot (cost O(store) — use ``write_delta``
-        for incremental batches)."""
-        return self._write_version("snapshot", tables, SCHEMAS)
+        for incremental batches) as the version after the current one;
+        ``FileExistsError`` if another write takes that version first."""
+        return self._write_version(
+            "snapshot", tables, SCHEMAS, self.current_version() + 1
+        )
 
     def write_delta(self, op: str, payload: dict[str, DataFrame]) -> int:
         """Append a delta version holding only the write batch, run
@@ -491,7 +520,10 @@ class GraphStore:
 
         Cost is O(batch) regardless of store size, except for the write
         that takes the chain past ``MAX_DELTA_CHAIN``: it checkpoints, at
-        O(store). Requires an existing anchor snapshot."""
+        O(store). A concurrent write may take the version this one
+        aimed at; the delta then lands on the next free one, and if
+        the checkpoint loses its version, the write that took it checks
+        the bound again. Requires an existing anchor snapshot."""
         if op not in self.DELTA_OPS:
             raise ValueError(f"unknown delta op {op!r}")
         if self.current_version() < 0:
@@ -504,7 +536,10 @@ class GraphStore:
         prepared = prepare(*(payload[n] for n in schemas))
         v = self._write_version(kind, dict(zip(schemas, prepared)), schemas)
         if self.delta_chain_length() > self.MAX_DELTA_CHAIN:
-            self.checkpoint()
+            # a write that took the checkpoint's version checks the
+            # bound itself
+            with contextlib.suppress(FileExistsError):
+                self.checkpoint()
         return v
 
     def delta_chain_length(self, version: int | None = None) -> int:
@@ -515,46 +550,40 @@ class GraphStore:
     def checkpoint(self) -> int:
         """Materialize merge-on-read state into a new full snapshot,
         resetting delta-chain depth to zero (LSM compaction). Readers
-        of older versions are untouched.
+        of older versions are untouched. It reads the current version
+        and claims exactly the one after it: ``FileExistsError`` if
+        another write took that version meanwhile.
 
         Each table is written in no more files than the anchor snapshot
         holds for it (at least 1): the folded plan's partition count
         grows with every union in the chain, so without the
         ``coalesce`` (which never shuffles) each checkpoint would hold
         more files than the last."""
-        anchor = self._chain(None)[0]
+        base = self.current_version()
+        anchor = self._chain(base)[0]
         tables = {
             tbl: df.coalesce(max(1, _parquet_files(self._dir(anchor, tbl))))
-            for tbl, df in self.read().items()
+            for tbl, df in self.read(base).items()
         }
-        return self.write(tables)
+        return self._write_version("snapshot", tables, SCHEMAS, base + 1)
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Snapshot GC: delete all but the newest ``keep_last``
-        snapshot versions (never the current pointer's target).
-        Returns the versions removed. The MVCC contract survives: any
-        reader that resolved ``_CURRENT`` before the vacuum reads a
-        retained version, because retention is newest-first and the
-        pointer always names the newest. A store with no committed
-        version has nothing to collect: an uncommitted ``v0`` may be a
-        write in progress."""
-        import shutil
-
-        current = self.current_version()
-        if current < 0:
-            return []
+        """Version GC: keep the newest ``keep_last`` versions (at least
+        the current one) and everything down to the snapshot they fold
+        from; delete the older versions and return them. Retention is
+        newest-first, so a read that starts after the vacuum finds
+        every version it folds; a lazy plan built before it may still
+        name files of a removed version and fail when it runs."""
         versions = self.list_versions()
-        keep = set(versions[-max(keep_last, 1):]) | {current}
+        if not versions:
+            return []
         # A retained delta needs its anchor snapshot and every delta in
-        # between — extend retention down to the oldest such anchor so
-        # merge-on-read never dangles.
-        anchor = self._chain(min(keep))[0]
-        keep |= {v for v in versions if v >= anchor}
-        removed = []
-        for v in versions:
-            if v not in keep:
-                shutil.rmtree(self._dir(v))
-                removed.append(v)
+        # between, so retention reaches down to the oldest such anchor
+        # and merge-on-read never dangles.
+        anchor = self._chain(versions[-max(keep_last, 1):][0])[0]
+        removed = [v for v in versions if v < anchor]
+        for v in removed:
+            shutil.rmtree(self._dir(v))
         return removed
 
     def diff(self, v_from: int, v_to: int | None = None) -> DataFrame:

@@ -8,8 +8,17 @@ merge as the batch store (via ``foreachBatch``).
 
 Scale notes: windowed aggregation state is partitioned by
 (window, event_type) in the state store; the 10-minute watermark
-bounds state size; ``foreachBatch`` upserts give exactly-once table
-maintenance when the sink table is an ACID format.
+bounds state size.
+
+Replays: Spark re-runs a micro-batch whose commit is missing from the
+stream checkpoint (a crash between its write and its commit), with the
+same ``batch_id``. A partials sink writes each micro-batch to its own
+``batch_id=N`` directory, replacing what an earlier run of that batch
+wrote, so its merge-on-read sees every batch once. A sink directory
+written by code that appended all batches into one directory cannot be
+mixed with this layout. The GraphStore streams are at-least-once: a
+replayed micro-batch writes its delta again (a replayed relation is
+stored twice), until deltas record the batch they came from.
 """
 
 from __future__ import annotations
@@ -107,26 +116,50 @@ def dedup_stream(
     )
 
 
+def _foreach_batch(stream: DataFrame, apply_batch, checkpoint_location: str):
+    """Start ``stream``, calling ``apply_batch(batch_df, batch_id)`` on
+    each micro-batch, with its progress in ``checkpoint_location``."""
+    return (
+        stream.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint_location)
+        .outputMode("update")
+        .start()
+    )
+
+
+def _partials_stream(stream: DataFrame, partials, sink_dir: str, checkpoint_dir: str):
+    """Write ``partials(batch_df)`` of each micro-batch as parquet to
+    ``{sink_dir}/batch_id={batch_id}``. The write replaces that
+    directory, so a replayed micro-batch leaves one copy of its
+    partials, not two. Readers load ``sink_dir`` and merge by named
+    columns, ignoring the ``batch_id`` partition column."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        partials(batch_df).write.mode("overwrite").parquet(
+            f"{sink_dir}/batch_id={batch_id}"
+        )
+
+    return _foreach_batch(stream, apply_batch, checkpoint_dir)
+
+
 def _store_stream(
     spark: SparkSession, dir_path: str, schema: str, apply, checkpoint_location: str
 ):
     """Stream JSON files (DDL ``schema``, one per micro-batch) into a
     ``GraphStore`` through ``apply(batch_df)``. The stream checkpoint
     is not optional: without it a restart re-reads EVERY source file
-    and re-applies every delta, doubling the store."""
+    and re-applies every delta, doubling the store. It does not make a
+    write exactly-once: a micro-batch replayed after a crash before its
+    commit applies its delta a second time."""
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.take(1):
             apply(batch_df)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(dir_path)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_location)
-        .outputMode("update")
-        .start()
+    return _foreach_batch(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(dir_path),
+        apply_batch,
+        checkpoint_location,
     )
 
 
@@ -261,21 +294,16 @@ def hypertable_stream(
     continuous aggregate incrementally.
     """
     minute_start = (F.unix_timestamp("ts") / 60).cast("bigint") * 60
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials = batch_df.groupBy(
+    return _partials_stream(
+        events,
+        lambda batch_df: batch_df.groupBy(
             minute_start.alias("bucket_start"), F.col("event_type")
         ).agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("_sum"),
-        )
-        partials.write.mode("append").parquet(sink_dir)
-
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+        ),
+        sink_dir,
+        checkpoint_dir,
     )
 
 
@@ -349,18 +377,14 @@ def topk_users_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):
     read time — the leaderboard pattern (write partials continuously,
     rank on serve) that holds at any user cardinality."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials = batch_df.groupBy("user_id").agg(
+    return _partials_stream(
+        events,
+        lambda batch_df: batch_df.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("_sum"),
-        )
-        partials.write.mode("append").parquet(sink_dir)
-
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+        ),
+        sink_dir,
+        checkpoint_dir,
     )
 
 
@@ -421,26 +445,19 @@ def stats_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):
     HLL-sketch trade (events_approx_users) covers distincts when a
     stream needs them."""
     cols = ["event_id", "user_id", "event_type", "value"]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in cols:
-            col = F.col(c)
-            # partials stay NATIVELY typed — merging string-rendered
-            # minima would order "10" < "9"; rendering happens once
-            # at read time
-            aggs += [
-                F.sum(col.isNull().cast("bigint")).alias(f"{c}__nulls"),
-                F.min(col).alias(f"{c}__min"),
-                F.max(col).alias(f"{c}__max"),
-            ]
-        batch_df.agg(*aggs).write.mode("append").parquet(sink_dir)
-
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    aggs = [F.count(F.lit(1)).alias("_rows")]
+    for c in cols:
+        col = F.col(c)
+        # partials stay NATIVELY typed — merging string-rendered
+        # minima would order "10" < "9"; rendering happens once
+        # at read time
+        aggs += [
+            F.sum(col.isNull().cast("bigint")).alias(f"{c}__nulls"),
+            F.min(col).alias(f"{c}__min"),
+            F.max(col).alias(f"{c}__max"),
+        ]
+    return _partials_stream(
+        events, lambda batch_df: batch_df.agg(*aggs), sink_dir, checkpoint_dir
     )
 
 
@@ -493,17 +510,13 @@ def cms_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):
     re-summing (same checkpoint pattern as hypertable_stream)."""
     from ..analytics.sketches import cms_counters
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        keyed = batch_df.select(
-            F.col("user_id").cast("string").alias("key")
-        )
-        cms_counters(keyed).write.mode("append").parquet(sink_dir)
-
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _partials_stream(
+        events,
+        lambda batch_df: cms_counters(
+            batch_df.select(F.col("user_id").cast("string").alias("key"))
+        ),
+        sink_dir,
+        checkpoint_dir,
     )
 
 
@@ -531,15 +544,13 @@ def bloom_stream(documents: DataFrame, sink_dir: str, checkpoint_dir: str):
     (the dedup_bloom contract)."""
     from ..textops.dedup import bloom_bit_words, lead_prefix_fp
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fps = batch_df.select(lead_prefix_fp(6).alias("fp")).distinct()
-        bloom_bit_words(fps).write.mode("append").parquet(sink_dir)
-
-    return (
-        documents.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _partials_stream(
+        documents,
+        lambda batch_df: bloom_bit_words(
+            batch_df.select(lead_prefix_fp(6).alias("fp")).distinct()
+        ),
+        sink_dir,
+        checkpoint_dir,
     )
 
 
@@ -574,9 +585,8 @@ def kmeans_serve_stream(
     fit_centroids — k·dim ints, the deployable artifact."""
     from ..vector.kmeans import DIST_EXPR, SCALE
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cdf = spark.createDataFrame(
+    def assign(batch_df: DataFrame) -> DataFrame:
+        cdf = batch_df.sparkSession.createDataFrame(
             centroids, "cluster int, c array<bigint>"
         )
         q = batch_df.select(
@@ -589,7 +599,7 @@ def kmeans_serve_stream(
         d = q.crossJoin(F.broadcast(cdf)).select(
             "vec_id", "cluster", F.expr(DIST_EXPR).alias("dist")
         )
-        (
+        return (
             d.groupBy("vec_id")
             .agg(F.min(F.struct("dist", "cluster")).alias("s"))
             .select(
@@ -597,16 +607,9 @@ def kmeans_serve_stream(
                 F.col("s.cluster").cast("int").alias("cluster"),
                 F.col("s.dist").cast("bigint").alias("dist_q"),
             )
-            .write.mode("append")
-            .parquet(sink_dir)
         )
 
-    return (
-        vectors.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
+    return _partials_stream(vectors, assign, sink_dir, checkpoint_dir)
 
 
 def type_count_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):
@@ -618,19 +621,13 @@ def type_count_stream(events: DataFrame, sink_dir: str, checkpoint_dir: str):
     — streamed result provably equal to the batch op (tested). State
     is O(users×types) counter rows per batch, no state store."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.groupBy("user_id", "event_type")
-            .agg(F.count("*").cast("bigint").alias("n_t"))
-            .write.mode("append")
-            .parquet(sink_dir)
-        )
-
-    return (
-        events.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _partials_stream(
+        events,
+        lambda batch_df: batch_df.groupBy("user_id", "event_type").agg(
+            F.count("*").cast("bigint").alias("n_t")
+        ),
+        sink_dir,
+        checkpoint_dir,
     )
 
 
@@ -693,20 +690,13 @@ def novelty_index_stream(
     twins."""
     from ..textops.dedup import _exploded_shingles
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _exploded_shingles(batch_df, 3)
-            .groupBy("shingle")
-            .agg(F.min("doc_id").alias("first_doc"))
-            .write.mode("append")
-            .parquet(sink_dir)
-        )
-
-    return (
-        documents.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
+    return _partials_stream(
+        documents,
+        lambda batch_df: _exploded_shingles(batch_df, 3)
+        .groupBy("shingle")
+        .agg(F.min("doc_id").alias("first_doc")),
+        sink_dir,
+        checkpoint_dir,
     )
 
 

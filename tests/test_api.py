@@ -191,6 +191,31 @@ def test_read_graph_empty_store(client):
     assert g["entities"] == [] and g["relations"] == []
 
 
+def test_clients_opening_one_new_path_share_its_first_version(spark, tmp_path):
+    """Two clients that open the same new store at once both start:
+    one creates the empty v0, the other finds it."""
+    import threading
+
+    path = str(tmp_path / "shared")
+    clients, errors = [], []
+
+    def open_client():
+        try:
+            clients.append(MemoryClient(spark, path))
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=open_client) for _ in range(2)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and len(clients) == 2
+    assert clients[0].store.list_versions() == [0]
+    assert clients[1].read_graph() == {"entities": [], "relations": []}
+
+
 def test_recency_ordering_preserved_across_upserts(client):
     # stored created_at survives upserts (client.ts:145-156), so
     # recency order is by FIRST creation

@@ -249,17 +249,18 @@ def test_graphstore_vacuum_keeps_delta_anchor(spark, tmp_path):
 
 
 def test_graphstore_vacuum_without_a_committed_version(spark, tmp_path):
-    """Nothing to collect before the first commit: a missing store and
-    an uncommitted v0 (a write in progress) both vacuum to ``[]``."""
+    """Nothing to collect before the first version: a missing store and
+    one holding only a pending write both vacuum to ``[]``."""
     import os
 
     from mcp_memory_libsql_spark.kg.store import GraphStore
 
     store = GraphStore(spark, str(tmp_path / "none"))
     assert store.vacuum() == []
-    os.makedirs(store._dir(0))
+    os.makedirs(os.path.join(store.path, "_pending-0"))
     assert store.vacuum() == []
-    assert store.list_versions() == [0]
+    assert store.list_versions() == []
+    assert os.listdir(store.path) == ["_pending-0"]
 
 
 def _mk_delta_store(spark, tmp_path):
@@ -497,17 +498,101 @@ def test_graphstore_payload_conforms_to_declared_schema(spark, tmp_path):
     }
 
 
-def test_graphstore_refuses_uncommitted_version(spark, tmp_path):
+def _relation_rows(store):
+    return sorted(map(tuple, store.read()["relations"].collect()))
+
+
+def test_graphstore_failed_write_leaves_no_version(spark, tmp_path):
+    """A write that fails mid-job publishes nothing and leaves no
+    pending directory; a pending directory a killed writer left behind
+    is never read and blocks no later write."""
+    import os
+
     store = _mk_store(spark, tmp_path)
-    v = store.current_version()
-    # a writer that crashed after its _TYPE marker but before the
-    # _CURRENT swap leaves v{current+1} behind
-    pending = tmp_path / "dstore" / f"v{v + 1}"
-    pending.mkdir()
-    (pending / "_TYPE").write_text("snapshot")
+    versions, rows = store.list_versions(), _relation_rows(store)
+    bad = spark.createDataFrame(
+        [("A", "B", "ok"), ("X", "B", "boom")],
+        "source string, target string, relation_type string",
+    ).withColumn(
+        "source",
+        F.when(F.col("source") == "X", F.raise_error(F.lit("injected")))
+        .otherwise(F.col("source")),
+    )
+    with pytest.raises(Exception, match="injected"):
+        store.write_delta("create_relations", {"batch_relations": bad})
+    assert store.list_versions() == versions
+    assert sorted(os.listdir(store.path)) == sorted(f"v{v}" for v in versions)
+    assert _relation_rows(store) == rows
+
+    killed = tmp_path / "dstore" / "_pending-killed"
+    killed.mkdir()
+    (killed / "_TYPE").write_text("snapshot")
+    assert store.list_versions() == versions
+    assert _relation_rows(store) == rows
+
+    v = store.write_delta("create_relations", {"batch_relations": spark.createDataFrame(
+        [("B", "A", "next")], "source string, target string, relation_type string"
+    )})
+    assert v == versions[-1] + 1
+    assert _relation_rows(store) == sorted(rows + [("B", "A", "next")])
+    assert killed.is_dir()
     with pytest.raises(FileNotFoundError):
         store.read(version=v + 1)
-    assert {r.name for r in store.read()["entities"].collect()} == {"A", "B"}
+
+
+def test_graphstore_concurrent_writers_lose_no_update(spark, tmp_path):
+    """Four writers, each through its own GraphStore on one path, write
+    three deltas apiece: every delta gets its own version and is
+    stored exactly once, the versions stay contiguous, and the next
+    write bounds the chain again."""
+    import os
+    import sys
+    import threading
+    from collections import Counter
+
+    from mcp_memory_libsql_spark.kg.store import SCHEMAS, GraphStore
+
+    path = _mk_store(spark, tmp_path).path
+    rows = _relation_rows(GraphStore(spark, path))
+    returned, errors = [], []
+
+    def writer(t):
+        store = GraphStore(spark, path)
+        try:
+            for i in range(3):
+                batch = spark.createDataFrame(
+                    [(f"w{t}", f"n{i}", "wrote")], SCHEMAS["relations"]
+                )
+                returned.append(
+                    store.write_delta("create_relations", {"batch_relations": batch})
+                )
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(t,)) for t in range(4)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    assert len(returned) == len(set(returned)) == 12
+    store = GraphStore(spark, path)
+    versions = store.list_versions()
+    assert versions == list(range(versions[0], versions[-1] + 1))
+    written = [(f"w{t}", f"n{i}", "wrote") for t in range(4) for i in range(3)]
+    got = Counter(_relation_rows(store))
+    assert got == Counter(rows + written)
+    store.write_delta("create_relations", {"batch_relations": spark.createDataFrame(
+        [("A", "B", "after")], SCHEMAS["relations"]
+    )})
+    assert store.delta_chain_length() <= GraphStore.MAX_DELTA_CHAIN
+    assert not [d for d in os.listdir(path) if d.startswith("_pending")]
 
 
 def test_similar_entities_jaccard_and_symmetry(spark, sf_dir):

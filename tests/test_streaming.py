@@ -5,6 +5,7 @@ from __future__ import annotations
 import json
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from mcp_memory_libsql_spark.io.tables import load_tables
@@ -991,3 +992,82 @@ def test_novelty_index_stream_matches_batch(spark, sf_dir, tmp_path):
         for r in ngram_novelty(docs, n=3).collect()
     }
     assert got == want
+
+
+_REPLAY_EVENTS = [
+    {
+        "event_id": i,
+        "ts": f"2024-01-01T00:0{i}:00",
+        "user_id": 0,
+        "event_type": "click",
+        "value": 1.0,
+        "props": "{}",
+    }
+    for i in range(4)
+]
+_REPLAY_VECTORS = [
+    {"vec_id": i, "embedding": [float(i % 2), 0.5]} for i in range(4)
+]
+
+
+def _vector_stream(spark, src):
+    return spark.readStream.schema("vec_id long, embedding array<float>").json(src)
+
+
+# sink → (source rows, stream reader, sink start, sink read); these are
+# the sinks whose merge-on-read would count a replayed batch twice
+_REPLAY_SINKS = {
+    "hypertable": (
+        _REPLAY_EVENTS, pipeline.read_event_stream,
+        pipeline.hypertable_stream, pipeline.read_hypertable,
+    ),
+    "topk_users": (
+        _REPLAY_EVENTS, pipeline.read_event_stream,
+        pipeline.topk_users_stream, pipeline.read_topk_users,
+    ),
+    "stats": (
+        _REPLAY_EVENTS, pipeline.read_event_stream,
+        pipeline.stats_stream, pipeline.read_stats,
+    ),
+    "cms": (
+        _REPLAY_EVENTS, pipeline.read_event_stream,
+        pipeline.cms_stream, pipeline.read_cms,
+    ),
+    "type_count": (
+        _REPLAY_EVENTS, pipeline.read_event_stream,
+        pipeline.type_count_stream, pipeline.read_type_entropy,
+    ),
+    "kmeans_serve": (
+        _REPLAY_VECTORS, _vector_stream,
+        lambda stream, sink, ckpt: pipeline.kmeans_serve_stream(
+            stream, [(0, [0, 0]), (1, [1 << 20, 0])], sink, ckpt
+        ),
+        lambda spark, sink: spark.read.parquet(sink).groupBy().count(),
+    ),
+}
+
+
+@pytest.mark.parametrize("sink_name", sorted(_REPLAY_SINKS))
+def test_partials_sink_writes_a_replayed_batch_once(spark, tmp_path, sink_name):
+    """A micro-batch whose commit is missing from the checkpoint (a
+    crash after its write) runs again on restart with the same
+    batch_id; the sink must still hold its partials once."""
+    rows, reader, start, read = _REPLAY_SINKS[sink_name]
+    src = tmp_path / "src"
+    src.mkdir()
+    with open(src / "part0.json", "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in rows)
+    sink, ckpt = str(tmp_path / "sink"), tmp_path / "ckpt"
+
+    def run():
+        q = start(reader(spark, str(src)), sink, str(ckpt))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return sorted(map(tuple, read(spark, sink).collect()))
+
+    once = run()
+    (ckpt / "commits" / "0").unlink()
+    (ckpt / "commits" / ".0.crc").unlink(missing_ok=True)
+    assert run() == once
